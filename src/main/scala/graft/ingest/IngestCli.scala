@@ -209,8 +209,9 @@ object IngestCli {
         try {
           val summary =
             if (streamingCkpt.isDefined && kafkaRoot.isDefined) {
-              IngestStream.runKafkaAvailableNow(spark, cfg, kafkaRoot.get, streamingCkpt.get)
-              s"kafka-log streaming drain complete (checkpoint ${streamingCkpt.get})"
+              val s = IngestStream.runKafkaAvailableNow(spark, cfg, kafkaRoot.get, streamingCkpt.get)
+              s"kafka-log streaming drain complete: ${s.records} record(s), ${s.tombstones} tombstone(s) " +
+                s"skipped in ${s.batches} batch(es) (checkpoint ${streamingCkpt.get})"
             } else if (streamingCkpt.isDefined) {
               IngestStream.runAvailableNow(spark, cfg, streamingCkpt.get)
               s"streaming drain complete (checkpoint ${streamingCkpt.get})"

@@ -240,8 +240,11 @@ object IngestJob {
 
   /** Executor-side encrypt+upload over `(path, content, dayStr)` rows —
     * shared by the batch day-loop ([[processDay]]) and the streaming sink
-    * ([[IngestStream]]). Wrapping key fetched ONCE per invocation on the
-    * driver (per day in the batch loop, per micro-batch ≈ per day in the
+    * ([[IngestStream]]). ONE Spark job per call: on the Kafka stream it is
+    * the micro-batch's only job, with the tombstone count riding it as an
+    * observed metric. Wrapping key fetched ONCE per invocation on the
+    * driver (per day in the batch loop, per micro-batch in the streams:
+    * one day on the day stream, one capped slice of the log on the Kafka
     * stream — the reference's per-day SSM hoist, :78).
     *
     * @param dayDirNormFor maps a day string to the normalized directory

@@ -4,6 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.slf4j.LoggerFactory
 
+/** Totals of one [[IngestStream.runKafkaAvailableNow]] run: micro-batches
+  * processed, records landed, and tombstones (null values) skipped.
+  */
+final case class KafkaDrainSummary(batches: Long, records: Long, tombstones: Long)
+
 /** Streaming form of the ingest pipeline: the reference's scheduled
   * 12-hour incremental run (`/root/reference/ci/resources.yml:20-23`)
   * expressed as ONE Structured Streaming query over the custom
@@ -94,6 +99,8 @@ object IngestStream {
     *    coordinates, so replays after a crash re-put the SAME key
     *    (at-least-once into an idempotent sink, fresh ciphertext per
     *    attempt like the reference's re-run semantics).
+    *
+    * @return this run's totals over the micro-batches it processed
     */
   def runKafkaAvailableNow(
       spark: SparkSession,
@@ -101,30 +108,46 @@ object IngestStream {
       kafkaRoot: String,
       checkpointDir: String,
       maxRecordsPerTrigger: Option[Long] = None
-  ): Unit = {
+  ): KafkaDrainSummary = {
     val reader = spark.readStream.format("graft-kafkalog").option("root", kafkaRoot)
     val src = maxRecordsPerTrigger
       .fold(reader)(n => reader.option("maxRecordsPerTrigger", n.toString))
       .load()
+    val batches, records, tombstones = new java.util.concurrent.atomic.AtomicLong()
     val query = src.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch((df: DataFrame, id: Long) => processKafkaBatch(cfg, df, id))
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        val (ok, dead) = processKafkaBatch(cfg, df, id)
+        batches.incrementAndGet()
+        records.addAndGet(ok)
+        tombstones.addAndGet(dead)
+        ()
+      }
       .start()
     try query.awaitTermination()
     finally if (query.isActive) query.stop()
+    KafkaDrainSummary(batches.get, records.get, tombstones.get)
   }
 
-  private[ingest] def processKafkaBatch(cfg: IngestConfig, batch: DataFrame, batchId: Long): Unit = {
+  /** Process one Kafka micro-batch in ONE Spark job: encrypt+upload every
+    * live record, counting the tombstones it skips as an observed metric of
+    * that same job.
+    *
+    * @return (records landed, tombstones skipped)
+    */
+  private[ingest] def processKafkaBatch(cfg: IngestConfig, batch: DataFrame, batchId: Long): (Long, Long) = {
     import batch.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, concat_ws, date_format}
+    import org.apache.spark.sql.functions.{col, concat_ws, count, date_format, when}
     // Tombstones (null value — Kafka's delete marker for compacted
     // topics) carry no payload to ingest; dropping them here keeps
     // Zlib.compress from NPEing and the batch from wedging on retry.
-    val live = batch.where(col("value").isNotNull)
-    val tombstones = batch.where(col("value").isNull).count()
-    if (tombstones > 0)
-      log.info(s"Kafka batch $batchId: skipped $tombstones tombstone record(s) (null value)")
+    // They are counted on their way past the filter, so the upload below
+    // is the batch's only job: no second pass re-reads the segments.
+    val obs = org.apache.spark.sql.Observation()
+    val live = batch
+      .observe(obs, count(when(col("value").isNull, 1)).as("tombstones"))
+      .where(col("value").isNotNull)
     val records = live
       .select(
         // no '/' in the synthesized name: uploadFiles keys on the last
@@ -135,11 +158,17 @@ object IngestStream {
       )
       .as[(String, Array[Byte], String)]
     val (ok, failed, samples, _) = IngestJob.uploadFiles(records, cfg, _ => "")
+    // The upload's job has filled the metric by the time it returns; an
+    // upload that throws propagates past this line and never waits on it.
+    val tombstones = obs.get("tombstones").asInstanceOf[Long]
+    if (tombstones > 0)
+      log.info(s"Kafka batch $batchId: skipped $tombstones tombstone record(s) (null value)")
     if (failed > 0) {
       val detail = samples.map(f => s"${f.path}: ${f.error}").mkString("; ")
       throw new RuntimeException(s"Kafka batch $batchId: $failed record(s) failed: $detail")
     }
     log.info(s"Kafka batch $batchId committed: $ok record(s)")
+    (ok, tombstones)
   }
 
   /** Align the reference-format progress file with the checkpoint's LAST

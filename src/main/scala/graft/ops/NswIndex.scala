@@ -968,7 +968,7 @@ object NswIndex {
     } else {
       val fp = new org.apache.hadoop.fs.Path(dir)
       if (fs.exists(fp)) fs.delete(fp, true) // replayed epoch: overwrite
-      fs.rename(sp, fp)
+      require(fs.rename(sp, fp), s"failed to publish $staging -> $dir")
     }
     n
   }

@@ -186,13 +186,21 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
+  /** Newest day the last `latestOffset` listing saw (`Some(None)`: it saw
+    * none), kept for [[reportLatestOffset]] so a trigger lists the source
+    * once. `None` until `latestOffset` has run.
+    */
+  @volatile private var lastListedDay: Option[Option[LocalDate]] = None
+
   /** Admit exactly ONE day per micro-batch: the oldest pending day after
     * `start`, bounded by the AvailableNow ceiling. Returning `start`
     * unchanged signals "no new data".
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val wm = start.asInstanceOf[AuditDayOffset].day
-    val all = AuditSource.pendingDays(spark, srcDir, wm)
+    val listed = AuditSource.listDays(spark, srcDir)
+    lastListedDay = Some(listed.lastOption.map(_.day))
+    val all = listed.filter(d => Watermark.isPending(d.day, wm))
     val pending =
       if (!availableNowPinned) all
       else availableNowCeiling match {
@@ -209,7 +217,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
     throw new IllegalStateException("latestOffset(Offset, ReadLimit) should be called instead")
 
   override def reportLatestOffset(): Offset =
-    AuditDayOffset(AuditSource.listDays(spark, srcDir).lastOption.map(_.day))
+    AuditDayOffset(lastListedDay.getOrElse(AuditSource.listDays(spark, srcDir).lastOption.map(_.day)))
 
   /** Plan the files of every day in (start, end] — normally exactly one
     * day — bin-packed into ~maxPartitionBytes partitions. Driver state is

@@ -728,9 +728,18 @@ private[sources] class KafkaLogMicroBatchStream(root: String, options: CaseInsen
   override def deserializeOffset(json: String): Offset = KafkaLogOffset.fromJson(json)
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
+  /** The log end the last `latestOffset` call saw (the pinned end under
+    * AvailableNow), kept for [[reportLatestOffset]] so a trigger does not
+    * list and header-skim every partition a second time. Never older than
+    * one `latestOffset` call — Spark's own Kafka source keeps its
+    * `latestPartitionOffsets` the same way.
+    */
+  @volatile private var lastSeenEnd: Option[Map[String, Long]] = None
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[KafkaLogOffset].offsets
     val end = availableNowEnd.getOrElse(endOffsets())
+    lastSeenEnd = Some(end)
     val admitted = maxRecordsPerTrigger match {
       case None => end
       case Some(budget) =>
@@ -763,7 +772,7 @@ private[sources] class KafkaLogMicroBatchStream(root: String, options: CaseInsen
 
   override def latestOffset(): Offset =
     throw new IllegalStateException("latestOffset(Offset, ReadLimit) should be called instead")
-  override def reportLatestOffset(): Offset = KafkaLogOffset(endOffsets())
+  override def reportLatestOffset(): Offset = KafkaLogOffset(lastSeenEnd.getOrElse(endOffsets()))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     plan(start.asInstanceOf[KafkaLogOffset].offsets, end.asInstanceOf[KafkaLogOffset].offsets)

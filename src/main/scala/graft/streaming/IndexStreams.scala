@@ -76,10 +76,13 @@ object IndexStreams {
     // staging dir instead: a rowless batch=<id> dir would carry no
     // partition columns and break schema inference for every later
     // reader of stream_assignment/ — absence is the representation. A
-    // crash at ANY point leaves nothing visible or the prior epoch dir,
-    // never a rowless one (the earlier write-then-delete shape had
-    // exactly that window); replay overwrites the staging dir and
-    // re-publishes, as idempotent as before. Still ONE Spark job.
+    // crash never leaves a rowless dir visible (the earlier
+    // write-then-delete shape had exactly that window). A REPLAYED epoch
+    // deletes its prior dir before the rename, so between the two
+    // neither generation is visible, and a crash there leaves the epoch
+    // absent until the replay re-publishes it; a failed rename raises.
+    // Replay overwrites the staging dir, as idempotent as before. Still
+    // ONE Spark job.
     val dir = s"$indexDir/stream_assignment/batch=$batchId"
     val staging = s"$indexDir/stream_assignment/_staging_batch=$batchId"
     assigned
@@ -96,7 +99,7 @@ object IndexStreams {
     } else {
       val fp = new org.apache.hadoop.fs.Path(dir)
       if (fs.exists(fp)) fs.delete(fp, true) // replayed epoch: overwrite
-      fs.rename(sp, fp)
+      require(fs.rename(sp, fp), s"failed to publish $staging -> $dir")
     }
     (n, row.get("drift").flatMap(Option(_)).map(_.asInstanceOf[Double]).getOrElse(Double.NaN))
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 import java.time.LocalDate
+import graft.ingest.AuditSource
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,6 +35,24 @@ class AuditAvailableNowSpec extends AnyFunSuite {
     assert(
       next.latestOffset(start, ReadLimit.allAvailable()) == AuditDayOffset(Some(LocalDate.parse("2021-01-01")))
     )
+  }
+
+  test("a latestOffset + reportLatestOffset pair lists the source once") {
+    graft.SparkSpec.spark
+    val src = Files.createTempDirectory("report-src")
+    for (day <- Seq("2021-03-01", "2021-03-02"))
+      Files.write(Files.createDirectories(src.resolve(day)).resolve("a.txt"), "x".getBytes)
+    val stream = new AuditMicroBatchStream(src.toString, emptyOpts)
+    val newest = AuditDayOffset(Some(LocalDate.parse("2021-03-02")))
+    assert(stream.reportLatestOffset() == newest, "before any latestOffset: a fresh listing")
+
+    val before = AuditSource.listDayCalls.get()
+    val next = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+    val reported = stream.reportLatestOffset()
+    val listings = AuditSource.listDayCalls.get() - before
+    assert(next == AuditDayOffset(Some(LocalDate.parse("2021-03-01"))))
+    assert(reported == newest)
+    assert(listings == 1, s"latestOffset + reportLatestOffset listed the source $listings times; expected 1")
   }
 
   test("a non-AvailableNow (continuous micro-batch) stream has no ceiling: new days admitted as they land") {

@@ -365,6 +365,41 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     assert(first.offsets == Map("t-0" -> 1L, "t-1" -> 5L))
   }
 
+  private def cappedStream(root: java.nio.file.Path, cap: Int) = new KafkaLogMicroBatchStream(
+    root.toString,
+    new CaseInsensitiveStringMap(Map("root" -> root.toString, "maxRecordsPerTrigger" -> cap.toString).asJava))
+
+  test("reportLatestOffset: the log end before any latestOffset, the pinned end under AvailableNow") {
+    val root = Files.createTempDirectory("klog-report")
+    writeTp(root, "t-0", (0L until 6L).map(o => rec(o, s"x$o")))
+    writeTp(root, "t-1", (0L until 3L).map(o => rec(o, s"y$o")))
+    val logEnd = KafkaLogOffset(Map("t-0" -> 6L, "t-1" -> 3L))
+    assert(cappedStream(root, 2).reportLatestOffset() == logEnd)
+
+    val pinned = cappedStream(root, 2)
+    pinned.prepareForTriggerAvailableNow()
+    // lands after the pin: past the end this run drains to
+    KafkaLogFormat.writeSegment(fs, new Path(root.resolve("t-0").toString), (6L until 9L).map(o => rec(o, s"x$o")))
+    val first = pinned.latestOffset(KafkaLogOffset(Map.empty), ReadLimit.allAvailable())
+    assert(first == KafkaLogOffset(Map("t-0" -> 1L, "t-1" -> 1L)))
+    assert(pinned.reportLatestOffset() == logEnd)
+    pinned.latestOffset(first, ReadLimit.allAvailable())
+    assert(pinned.reportLatestOffset() == logEnd)
+  }
+
+  test("reportLatestOffset without AvailableNow: never older than the last latestOffset") {
+    val root = Files.createTempDirectory("klog-report2")
+    writeTp(root, "t-0", (0L until 4L).map(o => rec(o, s"x$o")))
+    val stream = cappedStream(root, 2)
+    val first = stream.latestOffset(KafkaLogOffset(Map.empty), ReadLimit.allAvailable())
+    assert(stream.reportLatestOffset() == KafkaLogOffset(Map("t-0" -> 4L)))
+    KafkaLogFormat.writeSegment(fs, new Path(root.resolve("t-0").toString), (4L until 7L).map(o => rec(o, s"x$o")))
+    // kept from the last latestOffset: no second scan of the log per trigger
+    assert(stream.reportLatestOffset() == KafkaLogOffset(Map("t-0" -> 4L)))
+    stream.latestOffset(first, ReadLimit.allAvailable())
+    assert(stream.reportLatestOffset() == KafkaLogOffset(Map("t-0" -> 7L)))
+  }
+
   test("batch read form scans offset 0 to log end") {
     val root = Files.createTempDirectory("klog-batch")
     writeTp(root, "b-0", (0L until 4L).map(o => rec(o, s"v$o")))

@@ -11,7 +11,8 @@ import java.util.Base64
 /** The literal north star as ONE library call: Kafka-wire-format source →
   * compress → envelope-encrypt → object-store sink
   * ([[IngestStream.runKafkaAvailableNow]]). Pins key layout, decrypt
-  * round-trip, and offset-checkpoint resume (appended records only).
+  * round-trip, offset-checkpoint resume (appended records only), and
+  * tombstone handling in one Spark job per micro-batch.
   */
 class KafkaIngestStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -61,6 +62,61 @@ class KafkaIngestStreamSpec extends AnyFunSuite {
       store.get("audit/2021-07-15/audit-0-4.gz.enc"),
       store.getMetadata("audit/2021-07-15/audit-0-4.gz.enc")), priv))
     assert(new String(p4, "UTF-8") == "payload-4")
+  }
+
+  test("tombstones: no key lands for a null value, the drain counts them, one Spark job per batch") {
+    val root = Files.createTempDirectory("ktomb")
+    // A cap of 4 over two equal 8-record partitions admits offsets
+    // [2b, 2b+2) of each partition in batch b, so batch 1 (offsets 2-3)
+    // holds tombstones only; the rest are scattered over both partitions.
+    val dead = Map(0 -> Set(0L, 2L, 3L, 7L), 1 -> Set(2L, 3L, 5L))
+    for ((p, nulls) <- dead) {
+      val tp = new Path(root.resolve(s"audit-$p").toString)
+      fs.mkdirs(tp)
+      KafkaLogFormat.writeSegment(fs, tp, (0L until 8L).map { o =>
+        if (nulls(o)) KafkaLogFormat.Record(o, dayMs + o, null, null) else rec(o, s"p$p-$o")
+      })
+    }
+    val out = Files.createTempDirectory("ktomb-out")
+    val checkpoint = Files.createTempDirectory("ktomb-ckpt").toString
+    val cfg = cfgFor(out)
+
+    // Jobs per micro-batch, keyed by the batch id Spark sets on every job
+    // a batch submits. A marker job submitted after the drain arrives
+    // behind all of them on the listener bus (one thread, in order), so
+    // once it arrives the map is complete.
+    val jobsPerBatch = scala.collection.mutable.Map[String, Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobsPerBatch(b) = jobsPerBatch.getOrElse(b, 0) + 1)
+        if (props.exists(_.getProperty("ktomb.marker") != null)) drained.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val summary =
+      try {
+        val s = IngestStream.runKafkaAvailableNow(spark, cfg, root.toString, checkpoint, Some(4L))
+        spark.sparkContext.setLocalProperty("ktomb.marker", "1")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setLocalProperty("ktomb.marker", null)
+        assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+        s
+      } finally spark.sparkContext.removeSparkListener(listener)
+
+    val live = for ((p, nulls) <- dead.toSeq; o <- 0L until 8L if !nulls(o)) yield (p, o)
+    val store = cfg.storeFactory.create()
+    assert(store.listKeys("audit/").toSet ==
+      live.map { case (p, o) => s"audit/2021-07-15/audit-$p-$o.gz.enc" }.toSet)
+    val k = "audit/2021-07-15/audit-1-4.gz.enc"
+    val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), priv))
+    assert(new String(plain, "UTF-8") == "p1-4")
+
+    assert(summary == KafkaDrainSummary(batches = 4, records = live.size.toLong, tombstones = 7))
+    assert(jobsPerBatch.toMap == (0 until 4).map(b => b.toString -> 1).toMap,
+      s"jobs per micro-batch: $jobsPerBatch")
   }
 
   test("--kafka-root CLI flag requires --streaming") {
