@@ -55,6 +55,10 @@ object SessionTuning {
     * hard-coded `defaultParallelism` scheduled 32 near-empty sort tasks
     * per doubling round; at 100 TB the byte estimate dominates and the
     * cap keeps every core busy.
+    *
+    * Pass the frame BEFORE any `localCheckpoint()`: a checkpointed plan
+    * carries no statistics, only `defaultSizeInBytes` (effectively
+    * infinite), so the count silently pins at the cap.
     */
   def adaptiveParts(df: org.apache.spark.sql.DataFrame,
       targetBytes: Long = 16L << 20): Int = {
@@ -74,6 +78,9 @@ object SessionTuning {
     * target reflects that these rows carry heavy per-row lambdas (the
     * work/byte ratio is high); the cap restores full fan-out on real
     * corpora.
+    *
+    * The same caveat as [[adaptiveParts]]: a `localCheckpoint()`ed input
+    * reports `defaultSizeInBytes`, so the count pins at the cap.
     */
   def spreadParts(df: org.apache.spark.sql.DataFrame,
       bytesPerPart: Long = 64L << 10): Int = {

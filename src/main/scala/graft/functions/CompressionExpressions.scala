@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import graft.ingest.Zlib
 
-/** Raw-zlib compress/decompress as Catalyst expressions over BinaryType —
+/** zlib (RFC 1950) compress/decompress as Catalyst expressions over BinaryType —
   * the reference's per-file `zlib.compress` map step
   * (audit_data_ingest.py:118-119) expressed as a codegen-participating
   * column function: `df.select(zlib_compress($"content"))`.
@@ -32,7 +32,7 @@ case class ZlibCompress(child: Expression) extends ZlibExpression {
     Zlib.compress(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ingest.Zlib.compress($c, -1)")
+    defineCodeGen(ctx, ev, c => s"graft.ingest.Zlib.compress($c, -1, false)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -44,7 +44,7 @@ case class ZlibDecompress(child: Expression) extends ZlibExpression {
     Zlib.decompress(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ingest.Zlib.decompress($c)")
+    defineCodeGen(ctx, ev, c => s"graft.ingest.Zlib.decompress($c, false)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -5,43 +5,65 @@ import java.security.spec.{PKCS8EncodedKeySpec, X509EncodedKeySpec}
 import java.util.Base64
 import javax.crypto.Cipher
 import javax.crypto.spec.{GCMParameterSpec, SecretKeySpec}
-import java.util.zip.{Deflater, Inflater}
-import scala.collection.mutable.ArrayBuffer
+import java.util.Arrays
+import java.util.zip.{DataFormatException, Deflater, Inflater}
 
-/** Raw-zlib (RFC 1950) compression, byte-compatible with Python's
+/** zlib (RFC 1950) compression, byte-compatible with Python's
   * `zlib.compress`/`zlib.decompress` used by the reference
   * (audit_data_ingest.py:119) — note the reference writes a `.gz.enc`
   * suffix but the payload is zlib-framed, NOT gzip (no gzip header).
+  * `nowrap` gives raw RFC 1951 deflate (Avro's `deflate` codec).
+  *
+  * Both directions write into one `Array[Byte]`, doubled when full up to
+  * the JVM's largest array (past it they throw) and trimmed once; at
+  * levels 1-9 the bytes equal any other `Deflater` loop's. `decompress`
+  * throws `DataFormatException` on a truncated stream and on an FDICT
+  * (preset-dictionary) header, where `Inflater` returns 0 forever.
   */
 object Zlib {
-  def compress(data: Array[Byte], level: Int = Deflater.DEFAULT_COMPRESSION): Array[Byte] = {
-    val deflater = new Deflater(level, /* nowrap = */ false)
+  private[ingest] val MaxArrayLength = Int.MaxValue - 8
+
+  /** `wanted` clamped to [64, MaxArrayLength], in `Long` so `len * 3` cannot wrap. */
+  private[ingest] def capacity(wanted: Long): Int = math.max(64L, math.min(wanted, MaxArrayLength)).toInt
+
+  private[ingest] def grow(out: Array[Byte], limit: Int = MaxArrayLength): Array[Byte] = {
+    if (out.length >= limit) throw new IllegalStateException(s"zlib output exceeds the largest byte array ($limit bytes)")
+    Arrays.copyOf(out, math.min(out.length * 2L, limit).toInt)
+  }
+
+  def compress(data: Array[Byte], level: Int = Deflater.DEFAULT_COMPRESSION, nowrap: Boolean = false): Array[Byte] = {
+    val deflater = new Deflater(level, nowrap)
     try {
       deflater.setInput(data)
       deflater.finish()
-      val out = new ArrayBuffer[Byte](math.max(64, data.length / 3))
-      val buf = new Array[Byte](8192)
+      var out = new Array[Byte](capacity(data.length / 3L))
+      var len = 0
       while (!deflater.finished()) {
-        val n = deflater.deflate(buf)
-        out ++= buf.view.slice(0, n)
+        if (len == out.length) out = grow(out)
+        len += deflater.deflate(out, len, out.length - len)
       }
-      out.toArray
+      Arrays.copyOf(out, len)
     } finally deflater.end()
   }
 
-  def decompress(data: Array[Byte]): Array[Byte] = {
-    val inflater = new Inflater(/* nowrap = */ false)
+  def decompress(data: Array[Byte], nowrap: Boolean = false): Array[Byte] = {
+    val inflater = new Inflater(nowrap)
     try {
       inflater.setInput(data)
-      val out = new ArrayBuffer[Byte](math.max(64, data.length * 3))
-      val buf = new Array[Byte](8192)
+      var out = new Array[Byte](capacity(data.length * 3L))
+      var len = 0
       while (!inflater.finished()) {
-        val n = inflater.inflate(buf)
-        if (n == 0 && !inflater.finished() && inflater.needsInput())
-          throw new java.util.zip.DataFormatException("truncated zlib stream")
-        out ++= buf.view.slice(0, n)
+        if (len == out.length) out = grow(out)
+        val n = inflater.inflate(out, len, out.length - len)
+        // with output space free, no progress means no input or no dictionary
+        if (n == 0 && !inflater.finished())
+          throw new DataFormatException(
+            if (inflater.needsDictionary()) "zlib stream needs a preset dictionary (FDICT)"
+            else if (nowrap) "truncated deflate payload"
+            else "truncated zlib stream")
+        len += n
       }
-      out.toArray
+      Arrays.copyOf(out, len)
     } finally inflater.end()
   }
 }

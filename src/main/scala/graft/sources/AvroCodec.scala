@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{Deflater, Inflater}
+import graft.ingest.Zlib
 
 /** Avro Object Container File codec — the row-oriented interchange
   * format data platforms hand an ingest engine next to parquet/ORC
@@ -126,30 +126,6 @@ object AvroCodec {
 
   // -------------------------------------------------------------- write
 
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true) // nowrap: RAW deflate
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater(true)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream(data.length * 3 + 64)
-    val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      require(n > 0 || inf.finished(), "truncated deflate payload")
-      out.write(buf, 0, n)
-    }
-    inf.end()
-    out.toByteArray
-  }
-
   private def encodeRecord(out: ByteArrayOutputStream, schema: FlatSchema, rec: Seq[Any]): Unit = {
     require(rec.length == schema.fields.length,
       s"record arity ${rec.length} != schema arity ${schema.fields.length}")
@@ -186,7 +162,7 @@ object AvroCodec {
     records.grouped(recordsPerBlock).foreach { group =>
       val payload = new ByteArrayOutputStream()
       group.foreach(encodeRecord(payload, schema, _))
-      val enc = if (codec == "deflate") deflate(payload.toByteArray) else payload.toByteArray
+      val enc = if (codec == "deflate") Zlib.compress(payload.toByteArray, nowrap = true) else payload.toByteArray
       writeLong(out, group.length.toLong)
       writeLong(out, enc.length.toLong)
       out.write(enc)
@@ -230,7 +206,7 @@ object AvroCodec {
       val count = c.readLong()
       val size = c.readLong().toInt
       val raw = c.readRaw(size)
-      val data = if (codec == "deflate") inflate(raw) else raw
+      val data = if (codec == "deflate") Zlib.decompress(raw, nowrap = true) else raw
       val rc = new Cursor(data, 0)
       var i = 0L
       while (i < count) {

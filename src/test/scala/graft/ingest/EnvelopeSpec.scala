@@ -1,10 +1,15 @@
 package graft.ingest
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import java.util.Base64
+import java.util.zip.{DataFormatException, Deflater}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.util.Random
 
-class EnvelopeSpec extends AnyFunSuite {
+class EnvelopeSpec extends AnyFunSuite with TimeLimits {
   private lazy val (pub, priv) = Envelope.generateKeyPair()
 
   test("zlib round-trip identity") {
@@ -23,6 +28,40 @@ class EnvelopeSpec extends AnyFunSuite {
 
   test("zlib handles empty input") {
     assert(Zlib.decompress(Zlib.compress(Array.emptyByteArray)).isEmpty)
+  }
+
+  test("a preset-dictionary (FDICT) stream fails instead of spinning forever") {
+    val d = new Deflater()
+    val withDict = try {
+      d.setDictionary("audit record".getBytes)
+      d.setInput(("audit record " * 100).getBytes)
+      d.finish()
+      val buf = new Array[Byte](4096)
+      val n = d.deflate(buf)
+      assert(d.finished())
+      buf.take(n)
+    } finally d.end()
+    assert((withDict(1) & 0x20) != 0, "FDICT bit set in the zlib header")
+    // Inflater returns 0 forever on such a stream; the decode runs on its
+    // own thread so a regression fails on the timeout instead of hanging
+    implicit val signaler: Signaler = ThreadSignaler
+    val e = failAfter(Span(30, Seconds)) {
+      intercept[DataFormatException] {
+        Await.result(Future(Zlib.decompress(withDict))(ExecutionContext.global), Duration.Inf)
+      }
+    }
+    assert(e.getMessage.contains("preset dictionary"))
+  }
+
+  test("a stream truncated mid-body fails with DataFormatException") {
+    val rnd = new Random(3)
+    val words = Array("audit ", "record ", "user ", "login ")
+    val body = Array.fill(20000)(words(rnd.nextInt(words.length))).mkString
+    val c = Zlib.compress(body.getBytes("UTF-8"))
+    assert(intercept[DataFormatException](Zlib.decompress(c.take(c.length / 2))).getMessage == "truncated zlib stream")
+    val raw = Zlib.compress(body.getBytes("UTF-8"), nowrap = true)
+    assert(intercept[DataFormatException](Zlib.decompress(raw.take(raw.length / 2), nowrap = true))
+      .getMessage == "truncated deflate payload")
   }
 
   test("compress . decompress = id over random byte arrays (property)") {
