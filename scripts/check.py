@@ -1,12 +1,26 @@
 """Local mirror of the driver's correctness gate: run oracle SQL in DuckDB,
 compare against the parquet dumps from graft.Verify (sorted columns, sorted
-rows, exact values)."""
-import duckdb, json, math, sys, os
+rows, exact values).
+
+    python3 scripts/check.py [sf_dir] [verify_out_dir]
+
+DuckDB's memory and spill are capped so one heavy oracle query cannot fill
+the disk: CHECK_MEMORY_LIMIT (default 4GB), CHECK_TEMP_DIR (default a
+temporary directory, removed at exit) and CHECK_MAX_TEMP_SIZE (default 8GB)
+override the caps. A query that fails (out of memory, spill cap reached)
+prints `ERR <name>` and counts as a mismatch; the run goes on to the summary.
+"""
+import duckdb, json, math, sys, os, tempfile
 
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
 outdir = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
 
-con = duckdb.connect()
+spill = tempfile.TemporaryDirectory(prefix='check-duckdb-')
+con = duckdb.connect(config={
+    'memory_limit': os.environ.get('CHECK_MEMORY_LIMIT', '4GB'),
+    'temp_directory': os.environ.get('CHECK_TEMP_DIR', spill.name),
+    'max_temp_directory_size': os.environ.get('CHECK_MAX_TEMP_SIZE', '8GB'),
+})
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
@@ -25,8 +39,11 @@ for name in sorted(oracle):
     spark_path = f'{outdir}/{name}'
     if not os.path.isdir(spark_path):
         print(f'MISSING {name}'); mismatch += 1; continue
-    got = con.execute(f"SELECT * FROM '{spark_path}/*.parquet'").fetchdf()
-    exp = con.execute(oracle[name]).fetchdf()
+    try:
+        got = con.execute(f"SELECT * FROM '{spark_path}/*.parquet'").fetchdf()
+        exp = con.execute(oracle[name]).fetchdf()
+    except Exception as ex:
+        print(f'ERR     {name}: {type(ex).__name__}: {str(ex).splitlines()[0]}'); mismatch += 1; continue
     gcols, ecols = sorted(got.columns), sorted(exp.columns)
     if gcols != ecols:
         print(f'SCHEMA  {name}: spark={gcols} oracle={ecols}'); mismatch += 1; continue
@@ -51,6 +68,9 @@ for name in sorted(oracle):
 # rows-only entries
 for name in names:
     if name in oracle or not os.path.isdir(f'{outdir}/{name}'): continue
-    n = con.execute(f"SELECT count(*) FROM '{outdir}/{name}/*.parquet'").fetchone()[0]
+    try:
+        n = con.execute(f"SELECT count(*) FROM '{outdir}/{name}/*.parquet'").fetchone()[0]
+    except Exception as ex:
+        print(f'ERR     {name}: {type(ex).__name__}: {str(ex).splitlines()[0]}'); mismatch += 1; continue
     print(f'ROWSONLY {name}: {n} rows')
 print(f'\n{ok} matched, {mismatch} mismatched')

@@ -95,27 +95,20 @@ object AuditSource {
     }
   }
 
-  /** Scale-path variant: ALL pending days in one logical scan, with a
-    * `day` column — lets one Spark job cover the whole backlog instead of
-    * a day-at-a-time driver loop ([[IngestJob.runBacklog]] commits its
-    * watermark from this, day-ordered; manifest/analytics queries use it
-    * too). Built as a union of per-day [[readDay]] scans with a LITERAL
-    * day, so nested files attribute to the right day (a parent-dir parse
-    * would name the subdirectory) and zero-length files are kept. Driver
-    * cost is one listing per pending day — the same as the day-loop pays;
-    * a multi-year backlog (1000s of days) should be chunked by the caller
-    * into bounded runs, which the day-ordered watermark makes safe.
+  /** All of `days` in one logical scan of `(path, content, day)`, so one
+    * Spark job covers the whole backlog ([[IngestJob.run]] takes the day
+    * list it already holds, so the days it reads are exactly the days it
+    * commits). Built as a union of per-day [[readDay]] scans with a
+    * LITERAL day, so nested files attribute to the right day (a parent-dir
+    * parse would name the subdirectory) and zero-length files are kept.
+    * Driver cost is one `binaryFile` listing per day, serial; a multi-year
+    * backlog (1000s of days) should be chunked by the caller into bounded
+    * runs, which the day-ordered watermark makes safe.
     */
-  def readPending(spark: SparkSession, srcDir: String, watermark: Option[LocalDate]): DataFrame = {
-    val days = pendingDays(spark, srcDir, watermark)
-    if (days.isEmpty) {
-      spark.read.format("binaryFile").load(srcDir).limit(0)
-        .select(col("path"), col("content"))
-        .withColumn("day", lit(null).cast("date"))
-    } else {
-      days
-        .map(dp => readDay(spark, dp.path).withColumn("day", lit(java.sql.Date.valueOf(dp.day))))
-        .reduce(_.unionAll(_))
-    }
+  def readPending(spark: SparkSession, days: Seq[DayPartition]): DataFrame = {
+    require(days.nonEmpty, "readPending needs at least one day")
+    days
+      .map(dp => readDay(spark, dp.path).withColumn("day", lit(java.sql.Date.valueOf(dp.day))))
+      .reduce(_.unionAll(_))
   }
 }

@@ -10,7 +10,7 @@ import org.slf4j.LoggerFactory
   * dropped by design: `--tmp` (no local staging), `--processes` (Spark
   * task parallelism). The reference's `--hsm-key-param-name` SSM fetch
   * (:200-204) is `--key-param-name` + `--ssm-endpoint` here
-  * ([[ParameterStoreKeyProvider]], consulted once per day); a static
+  * ([[ParameterStoreKeyProvider]], fetched once per pending day); a static
   * `--public-key-file` remains the zero-egress alternative.
   *
   * Exit codes: 0 success OR expected-transient failure (warn-and-exit so
@@ -39,39 +39,42 @@ object IngestCli {
       |                             --s3-region, and the same AWS_* credentials
       |  --ssm-endpoint <url>       parameter-store endpoint for --key-param-name
       |  --progress-file <path>     watermark file (required)
-      |  --v2-sink                  write through the DataSource V2 graft-objects sink
-      |  --backlog                  process ALL pending days in ONE Spark job with
-      |                             day-ordered watermark commit (IngestJob.runBacklog)
       |  --streaming <checkpoint>   run as ONE Structured Streaming AvailableNow drain over the
       |                             graft-audit source (one day per micro-batch, checkpoint =
-      |                             watermark, restart-resume) instead of the batch day-loop
+      |                             watermark, restart-resume) instead of the batch run
       |  --kafka-root <dir>         with --streaming: drain Kafka-wire-format log segments
       |                             (graft-kafkalog source) instead of the dated-dir drop;
       |                             the checkpointed offset map is the watermark and keys are
       |                             {prefix}{day}/{topic}-{partition}-{offset}.gz.enc
       |  --aes-mode <gcm|eax>       payload cipher: gcm (hardened default) or eax (reference parity)
       |  --retries <n>              store-put attempts AND Spark task retries (default 3)
+      |
+      |Without --streaming, every pending day is ingested in one Spark job (one key fetch
+      |per day) and the watermark is committed day by day, oldest first, up to the first
+      |day with a failed file.
       |""".stripMargin
 
-  /** Parsed CLI: config plus the sink/engine mode selectors. */
+  /** Parsed CLI: config plus the engine mode selectors. */
   final case class ParsedArgs(
       cfg: IngestConfig,
-      useV2: Boolean,
       retries: Int,
       streamingCheckpoint: Option[String],
-      backlog: Boolean = false,
       kafkaRoot: Option[String] = None
+  )
+
+  private val options = Set(
+    "src-dir", "out-root", "s3-bucket", "s3-endpoint", "s3-region", "s3-prefix", "key-id",
+    "public-key-file", "key-param-name", "ssm-endpoint", "progress-file", "streaming", "kafka-root",
+    "aes-mode", "retries"
   )
 
   def parseArgs(args: Array[String], env: String => Option[String] = sys.env.get): Either[String, ParsedArgs] = {
     val m = scala.collection.mutable.Map[String, String]()
-    var v2 = false
-    var backlog = false
     var i = 0
     while (i < args.length) {
       args(i) match {
-        case "--v2-sink" => v2 = true; i += 1
-        case "--backlog" => backlog = true; i += 1
+        case flag if flag.startsWith("--") && !options(flag.stripPrefix("--")) =>
+          return Left(s"Unknown option: $flag")
         case flag if flag.startsWith("--") && i + 1 < args.length =>
           m(flag.stripPrefix("--")) = args(i + 1); i += 2
         case other => return Left(s"Unexpected argument: $other")
@@ -132,8 +135,6 @@ object IngestCli {
     }
     val streaming = m.get("streaming")
     if (streaming.exists(_.isEmpty)) return Left("--streaming requires a checkpoint directory")
-    if (Seq(streaming.isDefined, v2, backlog).count(identity) > 1)
-      return Left("--streaming, --v2-sink, and --backlog are mutually exclusive")
     val kafkaRoot = m.get("kafka-root")
     if (kafkaRoot.isDefined && streaming.isEmpty)
       return Left("--kafka-root requires --streaming <checkpoint>")
@@ -150,10 +151,8 @@ object IngestCli {
           putRetries = retries,
           keyProvider = keyProvider
         ),
-        v2,
         retries,
         streaming,
-        backlog,
         kafkaRoot
       )
     )
@@ -189,7 +188,7 @@ object IngestCli {
         System.err.println(err)
         System.err.println(usage)
         sys.exit(2)
-      case Right(ParsedArgs(cfg, useV2, retries, streamingCkpt, backlog, kafkaRoot)) =>
+      case Right(ParsedArgs(cfg, retries, streamingCkpt, kafkaRoot)) =>
         val spark = SparkSession
           .builder()
           .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -215,20 +214,6 @@ object IngestCli {
             } else if (streamingCkpt.isDefined) {
               IngestStream.runAvailableNow(spark, cfg, streamingCkpt.get)
               s"streaming drain complete (checkpoint ${streamingCkpt.get})"
-            } else if (backlog) {
-              val s = IngestJob.runBacklog(spark, cfg)
-              s"${s.days.size} day(s), ${s.filesOk} file(s) in one backlog job"
-            } else if (useV2) {
-              // Works through the ObjectStoreFactory seam (StoreOptions maps
-              // it to DSv2 options), so --v2-sink composes with --s3-bucket
-              // instead of crashing on a LocalDirObjectStoreFactory cast.
-              val watermark = Watermark.read(cfg.progressFile)
-              val days = AuditSource.pendingDays(spark, cfg.srcDir, watermark)
-              days.foreach { dp =>
-                IngestJob.processDayV2(spark, cfg, dp)
-                Watermark.commit(cfg.progressFile, dp.day)
-              }
-              s"${days.size} day(s) via v2 sink"
             } else {
               val s = IngestJob.run(spark, cfg)
               s"${s.days.size} day(s), ${s.filesOk} file(s)"

@@ -17,7 +17,7 @@ final case class KafkaDrainSummary(batches: Long, records: Long, tombstones: Lon
   *
   * Shape: `readStream.format("graft-audit")` admits one pending day per
   * micro-batch (oldest first); `foreachBatch` runs the same executor-side
-  * compress→envelope-encrypt→put loop as the batch day-loop
+  * compress→envelope-encrypt→put loop as the batch core
   * ([[IngestJob.uploadFiles]]); `Trigger.AvailableNow` drains the backlog
   * then terminates. The checkpointed offset log IS the watermark — a
   * restart resumes from the last committed day — and each committed day is
@@ -53,19 +53,19 @@ object IngestStream {
       .select("path", "content", "day")
       .as[(String, Array[Byte], java.sql.Date)]
       .map { case (path, content, day) => (path, content, day.toLocalDate.toString) }
-    val (ok, failed, samples, maxDay) = IngestJob.uploadFiles(files, cfg, dayStr => s"$srcRootNorm/$dayStr")
-    if (failed > 0) {
-      val detail = samples.map(f => s"${f.path}: ${f.error}").mkString("; ")
-      throw new RuntimeException(s"Batch $batchId: $failed file(s) failed: $detail")
-    }
+    val pubB64 = cfg.wrappingKeyB64() // one fetch per micro-batch (ref :78)
+    val summary = IngestSummary(IngestJob.uploadFiles(files, cfg, _ => pubB64, dayStr => s"$srcRootNorm/$dayStr"))
+    if (summary.filesFailed > 0)
+      throw new RuntimeException(s"Batch $batchId: ${summary.filesFailed} file(s) failed: ${summary.failureDetail}")
+    val maxDay = summary.days.lastOption.map(_.day)
     // Mirror the completed day into the reference-format progress file
     // HERE rather than only in the source's commit() callback: Spark
     // delivers source.commit(end) while constructing the NEXT batch, so
     // the final day of an AvailableNow drain would never reach the mirror.
     // Writing it just before the offset commit keeps at-least-once (a
     // crash in between re-runs the day; puts are idempotent by key).
-    maxDay.foreach(d => Watermark.commit(cfg.progressFile, java.time.LocalDate.parse(d)))
-    log.info(s"Batch $batchId committed: $ok file(s), watermark mirror -> $maxDay")
+    maxDay.foreach(Watermark.commit(cfg.progressFile, _))
+    log.info(s"Batch $batchId committed: ${summary.filesOk} file(s), watermark mirror -> $maxDay")
   }
 
   /** Run one `Trigger.AvailableNow` drain of the backlog: every pending
@@ -157,18 +157,17 @@ object IngestStream {
         date_format(col("timestamp"), "yyyy-MM-dd").as("day")
       )
       .as[(String, Array[Byte], String)]
-    val (ok, failed, samples, _) = IngestJob.uploadFiles(records, cfg, _ => "")
+    val pubB64 = cfg.wrappingKeyB64() // one fetch per micro-batch (ref :78)
+    val summary = IngestSummary(IngestJob.uploadFiles(records, cfg, _ => pubB64, _ => ""))
     // The upload's job has filled the metric by the time it returns; an
     // upload that throws propagates past this line and never waits on it.
     val tombstones = obs.get("tombstones").asInstanceOf[Long]
     if (tombstones > 0)
       log.info(s"Kafka batch $batchId: skipped $tombstones tombstone record(s) (null value)")
-    if (failed > 0) {
-      val detail = samples.map(f => s"${f.path}: ${f.error}").mkString("; ")
-      throw new RuntimeException(s"Kafka batch $batchId: $failed record(s) failed: $detail")
-    }
-    log.info(s"Kafka batch $batchId committed: $ok record(s)")
-    (ok, tombstones)
+    if (summary.filesFailed > 0)
+      throw new RuntimeException(s"Kafka batch $batchId: ${summary.filesFailed} record(s) failed: ${summary.failureDetail}")
+    log.info(s"Kafka batch $batchId committed: ${summary.filesOk} record(s)")
+    (summary.filesOk, tombstones)
   }
 
   /** Align the reference-format progress file with the checkpoint's LAST

@@ -3,9 +3,10 @@ package graft.ingest
 /** Pluggable source of the b64 X.509 RSA wrapping key — the seam where an
   * SSM-like parameter store plugs in. The reference fetches the key once
   * per day-batch (audit_data_ingest.py:78, 200-204); here the provider is
-  * consulted on the DRIVER at the start of every day and the returned
-  * string ships in the task closure (the same per-day hoist), so a
-  * long-running deployment can rotate keys between days and executors
+  * consulted on the DRIVER once per pending day, in day order, before the
+  * run's one job (once per micro-batch in the streams), and the returned
+  * strings ship in the task closure (the same per-day hoist), so a
+  * long-running deployment can rotate keys between runs and executors
   * never need parameter-store access or credentials.
   *
   * A provider backed by a real parameter store should throw

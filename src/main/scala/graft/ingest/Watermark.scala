@@ -31,22 +31,28 @@ object Watermark {
     }
   }
 
-  /** Atomically overwrite the watermark with the completed day.
-    * Temp-file + ATOMIC_MOVE so a crash mid-commit can never leave a
+  /** Overwrite the watermark with the completed day: temp file + rename
+    * (ATOMIC_MOVE where the file system has it), so a PROCESS crash
+    * mid-commit leaves either the old date or the new one, never a
     * half-written date (stronger than the reference's plain overwrite,
-    * same observable semantics).
+    * same observable semantics). Nothing is fsynced: after a power loss or
+    * OS crash the commit may be lost (the day re-runs, at-least-once) or
+    * the file may be left empty, which [[read]] rejects as corrupt. A
+    * failed write or move deletes the temp file and rethrows.
     */
   def commit(progressFile: String, completedDay: LocalDate): Unit = {
     val target = Paths.get(progressFile).toAbsolutePath
     val parent = Option(target.getParent).getOrElse(Paths.get("."))
     Files.createDirectories(parent)
     val tmp: Path = Files.createTempFile(parent, ".watermark", ".tmp")
-    Files.write(tmp, completedDay.format(Fmt).getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
+    try {
+      Files.write(tmp, completedDay.format(Fmt).getBytes(StandardCharsets.UTF_8))
+      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      catch {
+        case _: java.nio.file.AtomicMoveNotSupportedException =>
+          Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally Files.deleteIfExists(tmp) // a no-op once the move has happened
   }
 
   /** Parse a `YYYY-MM-DD` day-directory name; None for non-dated dirs,

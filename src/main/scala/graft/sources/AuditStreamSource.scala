@@ -44,7 +44,7 @@ import graft.ingest.{AuditSource, Watermark}
   *    terminates — the reference's scheduled-run shape.
   *  - An optional `progressFile` option mirrors each committed day into
   *    the reference-format watermark file ([[SparkDataStream.commit]]),
-  *    keeping the batch day-loop and the stream interchangeable.
+  *    keeping the batch core and the stream interchangeable.
   *
   * 100 TB posture: the driver holds only day names and file metadata
   * (path, length) for the ONE day being admitted; content bytes are read

@@ -30,7 +30,7 @@ import scala.jdk.CollectionConverters._
   *
   * One store client per task (the reference's one-boto3-client-per-thread,
   * :190-197); task retries re-put idempotently by key, giving the same
-  * at-least-once semantics as the day-loop sink. Reads are idempotent.
+  * at-least-once semantics as the batch ingest core. Reads are idempotent.
   *
   * 100 TB posture: the driver holds key NAMES only (one listing per scan);
   * bytes move store→executor in the tasks. Partitions are round-robin
@@ -68,9 +68,9 @@ object ObjectStoreSinkProvider {
   */
 private[graft] object StoreOptions {
   /** Inverse of [[factoryFrom]]: DSv2 options that reconstruct `factory`
-    * on the executors — lets callers holding the ingest seam (e.g. the
-    * CLI's --v2-sink path) target ANY store kind through the same
-    * `format("graft-objects")` write, instead of casting to a local dir.
+    * on the executors — lets callers holding the ingest seam target ANY
+    * store kind through the same `format("graft-objects")` write, instead
+    * of casting to a local dir.
     */
   def optionsFor(factory: ObjectStoreFactory): Map[String, String] = factory match {
     case LocalDirObjectStoreFactory(root) => Map("root" -> root)

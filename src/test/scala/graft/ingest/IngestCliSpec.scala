@@ -14,14 +14,14 @@ class IngestCliSpec extends AnyFunSuite {
 
   test("parseArgs: full happy path") {
     val kf = keyFile()
-    val Right(IngestCli.ParsedArgs(cfg, v2, retries, streaming, _, _)) = IngestCli.parseArgs(
+    val Right(IngestCli.ParsedArgs(cfg, retries, streaming, _)) = IngestCli.parseArgs(
       Array(
         "--src-dir", "/s", "--out-root", "/o", "--s3-prefix", "p/", "--key-id", "k",
-        "--public-key-file", kf, "--progress-file", "/p.txt", "--v2-sink", "--retries", "5"
+        "--public-key-file", kf, "--progress-file", "/p.txt", "--retries", "5"
       )
     ): @unchecked
     assert(cfg.srcDir == "/s" && cfg.s3Prefix == "p/" && cfg.masterKeyId == "k")
-    assert(cfg.publicKeyB64.nonEmpty && v2 && retries == 5 && streaming.isEmpty)
+    assert(cfg.publicKeyB64.nonEmpty && retries == 5 && streaming.isEmpty)
   }
 
   test("parseArgs: missing required options named in the error") {
@@ -59,38 +59,37 @@ class IngestCliSpec extends AnyFunSuite {
   }
 
   test("parseArgs: --aes-mode eax selects reference-parity cipher; bad mode is a usage error") {
-    val Right(IngestCli.ParsedArgs(cfg, _, _, _, _, _)) =
+    val Right(IngestCli.ParsedArgs(cfg, _, _, _)) =
       IngestCli.parseArgs(baseArgs(keyFile()) ++ Array("--aes-mode", "eax")): @unchecked
     assert(cfg.aesMode == Envelope.AesMode.Eax)
-    val Right(IngestCli.ParsedArgs(cfg2, _, _, _, _, _)) = IngestCli.parseArgs(baseArgs(keyFile())): @unchecked
+    val Right(IngestCli.ParsedArgs(cfg2, _, _, _)) = IngestCli.parseArgs(baseArgs(keyFile())): @unchecked
     assert(cfg2.aesMode == Envelope.AesMode.Gcm)
     val Left(err) = IngestCli.parseArgs(baseArgs(keyFile()) ++ Array("--aes-mode", "cbc")): @unchecked
     assert(err.contains("--aes-mode"))
   }
 
   test("parseArgs: --retries feeds both task retries and store put attempts") {
-    val Right(IngestCli.ParsedArgs(cfg, _, retries, _, _, _)) =
+    val Right(IngestCli.ParsedArgs(cfg, retries, _, _)) =
       IngestCli.parseArgs(baseArgs(keyFile()) ++ Array("--retries", "7")): @unchecked
     assert(retries == 7 && cfg.putRetries == 7)
   }
 
   test("parseArgs: --streaming selects the streaming drain; exclusive with --v2-sink") {
-    val Right(IngestCli.ParsedArgs(_, _, _, streaming, _, _)) =
+    val Right(IngestCli.ParsedArgs(_, _, streaming, _)) =
       IngestCli.parseArgs(baseArgs(keyFile()) ++ Array("--streaming", "/ckpt")): @unchecked
     assert(streaming.contains("/ckpt"))
     val Left(err) = IngestCli.parseArgs(
       baseArgs(keyFile()) ++ Array("--streaming", "/ckpt", "--v2-sink")
     ): @unchecked
-    assert(err.contains("mutually exclusive"))
+    assert(err.contains("--v2-sink"))
   }
 
-  test("parseArgs: --backlog selects the one-job mode; exclusive with the other engines") {
-    val Right(IngestCli.ParsedArgs(_, _, _, _, backlog, _)) =
-      IngestCli.parseArgs(baseArgs(keyFile()) :+ "--backlog"): @unchecked
-    assert(backlog)
-    val Left(err) =
-      IngestCli.parseArgs(baseArgs(keyFile()) ++ Array("--backlog", "--streaming", "/ckpt")): @unchecked
-    assert(err.contains("mutually exclusive"))
+  test("parseArgs: unknown options, such as the removed --backlog, are usage errors") {
+    // a flag in the middle must not swallow the next flag as its value
+    for (args <- Seq(baseArgs(keyFile()) :+ "--backlog", Array("--backlog") ++ baseArgs(keyFile()))) {
+      val Left(err) = IngestCli.parseArgs(args): @unchecked
+      assert(err == "Unknown option: --backlog")
+    }
   }
 
   test("parseArgs: --s3-bucket builds the S3 store from flags + standard AWS env credentials") {
@@ -101,7 +100,7 @@ class IngestCliSpec extends AnyFunSuite {
       "--src-dir", "/s", "--key-id", "k", "--progress-file", "/p.txt", "--public-key-file", keyFile(),
       "--s3-bucket", "b", "--s3-endpoint", "https://s3.local", "--s3-region", "r"
     )
-    val Right(IngestCli.ParsedArgs(cfg, _, _, _, _, _)) = IngestCli.parseArgs(args, env.get): @unchecked
+    val Right(IngestCli.ParsedArgs(cfg, _, _, _)) = IngestCli.parseArgs(args, env.get): @unchecked
     assert(cfg.storeFactory == S3ObjectStoreFactory("https://s3.local", "r", "b", "AK", "SK", Some("TOK")))
 
     val Left(err) = IngestCli.parseArgs(args, _ => None): @unchecked
@@ -116,7 +115,7 @@ class IngestCliSpec extends AnyFunSuite {
       "--src-dir", "/s", "--key-id", "k", "--progress-file", "/p.txt", "--out-root", "/o",
       "--key-param-name", "/data/key", "--ssm-endpoint", "https://ssm.local", "--s3-region", "r"
     )
-    val Right(IngestCli.ParsedArgs(cfg, _, _, _, _, _)) = IngestCli.parseArgs(args, env.get): @unchecked
+    val Right(IngestCli.ParsedArgs(cfg, _, _, _)) = IngestCli.parseArgs(args, env.get): @unchecked
     assert(cfg.keyProvider ==
       Some(ParameterStoreKeyProvider("https://ssm.local", "r", "/data/key", "AK", "SK", None)))
 

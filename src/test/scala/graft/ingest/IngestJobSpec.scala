@@ -17,6 +17,18 @@ final case class PoisonedStoreFactory(root: String) extends ObjectStoreFactory {
   }
 }
 
+/** Failure-injection store: keys containing "expired" fail as if the
+  * store's credentials had expired mid-run.
+  */
+final case class ExpiringStoreFactory(root: String) extends ObjectStoreFactory {
+  override def create(): ObjectStore = new LocalDirObjectStore(root) {
+    override def put(key: String, data: Array[Byte], metadata: Map[String, String]): Unit = {
+      if (key.contains("expired")) throw new TransientCredentialsException(s"token expired at $key")
+      super.put(key, data, metadata)
+    }
+  }
+}
+
 /** E2E mirror of the reference's test_hello (tests/test_audit_data_ingest.py:18-26)
   * with the stronger round-trip assertion FIXTURES.md §1.4 calls for.
   */
@@ -59,31 +71,50 @@ class IngestJobSpec extends AnyFunSuite {
       progressFile = progress.toString
     )
 
-  test("runBacklog: whole 3-day backlog lands in ONE Spark job, watermark committed day-ordered") {
+  /** Runs `f` and counts the Spark jobs it submits from this thread. A
+    * marker job submitted after `f` arrives behind them on the listener bus
+    * (one thread, in order), so once it arrives the count is complete.
+    */
+  private def countingJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty("ingest.spec.marker") != null)) drained.countDown()
+        else if (props.exists(_.getProperty("ingest.spec.counted") != null)) jobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("ingest.spec.counted", "1")
+      val out = try f finally sc.setLocalProperty("ingest.spec.counted", null)
+      sc.setLocalProperty("ingest.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("ingest.spec.marker", null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("run: the whole 3-day backlog lands in ONE Spark job after ONE listing, watermark committed day-ordered") {
     val (src, contents) = makeSource()
     val out = Files.createTempDirectory("backlog-out")
     val progress = Files.createTempDirectory("wm").resolve("progress.txt")
     val cfg = cfgFor(src, out, progress)
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val summary =
-      try IngestJob.runBacklog(spark, cfg)
-      finally {
-        Thread.sleep(2000) // let the async listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val listingsBefore = AuditSource.listDayCalls.get()
+    val (summary, jobs) = countingJobs(IngestJob.run(spark, cfg))
+    val listings = AuditSource.listDayCalls.get() - listingsBefore
 
     assert(summary.days.map(_.day.toString) == Seq("2020-10-10", "2020-10-11", "2020-10-12"))
     assert(summary.filesOk == 15)
     assert(Watermark.read(cfg.progressFile).contains(LocalDate.parse("2020-10-12")))
-    assert(jobs.get() == 1, s"backlog scheduled ${jobs.get()} Spark job(s); expected exactly 1")
+    assert(jobs == 1, s"run scheduled $jobs Spark job(s); expected exactly 1")
+    assert(listings == 1, s"run listed the day directories $listings times; expected exactly 1")
 
-    // layout + content parity with the day-loop, incl. the 0-byte file
+    // layout + content, incl. the 0-byte file
     val store = cfg.storeFactory.create()
     val keys = store.listKeys("audit/")
     assert(keys.size == 15)
@@ -93,28 +124,62 @@ class IngestJobSpec extends AnyFunSuite {
     assert(plain.sameElements(contents("2020-10-11/audit-data-1.json")))
   }
 
-  test("runBacklog: dirty middle day holds the watermark at the last clean day; re-run completes") {
+  test("run: a dirty middle day holds the watermark at the last clean day; re-run completes") {
     val (src, _) = makeSource()
     Files.write(src.resolve("2020-10-11").resolve("poison.json"), "bad".getBytes)
     val out = Files.createTempDirectory("backlog-out")
     val progress = Files.createTempDirectory("wm").resolve("progress.txt")
     val bad = cfgFor(src, out, progress).copy(storeFactory = PoisonedStoreFactory(out.toString))
 
-    val e = intercept[RuntimeException](IngestJob.runBacklog(spark, bad))
+    val e = intercept[RuntimeException](IngestJob.run(spark, bad))
     assert(e.getMessage.contains("2020-10-11"))
     // commit stopped at the clean day BEFORE the dirty one
     assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-10")))
-    // single-job divergence from the loop (documented): later days were
-    // attempted — their objects exist but stay unwatermarked
+    // one-job divergence from the reference's loop (documented): later
+    // days were attempted — their objects exist but stay unwatermarked
     val store = bad.storeFactory.create()
     assert(store.listKeys("audit/2020-10-12/").size == 5)
 
     // healthy store, same progress file: days 2+3 re-run, backlog completes
     val good = cfgFor(src, out, progress)
-    val summary2 = IngestJob.runBacklog(spark, good)
+    val summary2 = IngestJob.run(spark, good)
     assert(summary2.days.map(_.day.toString) == Seq("2020-10-11", "2020-10-12"))
     assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-12")))
     assert(store.listKeys("audit/2020-10-11/").size == 6) // 5 fixtures + poison.json
+  }
+
+  test("run: expired credentials on one day's put commit no day of the run; the CLI sees a transient error") {
+    val (src, _) = makeSource()
+    Files.write(src.resolve("2020-10-11").resolve("expired.json"), "x".getBytes)
+    val out = Files.createTempDirectory("audit-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    Watermark.commit(progress.toString, LocalDate.parse("2020-10-09"))
+    val cfg = cfgFor(src, out, progress).copy(storeFactory = ExpiringStoreFactory(out.toString))
+
+    val e = intercept[Exception](IngestJob.run(spark, cfg))
+    assert(IngestCli.isTransient(e), s"not recognised as transient: $e")
+    // even the clean day before the failing one stays uncommitted
+    assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-09")))
+  }
+
+  test("run: no pending day means no Spark job and no key fetch") {
+    val (src, _) = makeSource()
+    val out = Files.createTempDirectory("audit-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    Watermark.commit(progress.toString, LocalDate.parse("2020-10-12"))
+    val fetches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counting = new KeyProvider {
+      override def wrappingKeyB64(): String = { fetches.incrementAndGet(); pubB64 }
+    }
+    val cfg = cfgFor(src, out, progress).copy(keyProvider = Some(counting))
+
+    val listingsBefore = AuditSource.listDayCalls.get()
+    val (summary, jobs) = countingJobs(IngestJob.run(spark, cfg))
+    assert(summary.days.isEmpty)
+    assert(jobs == 0, s"an empty backlog scheduled $jobs Spark job(s)")
+    assert(fetches.get() == 0)
+    assert(AuditSource.listDayCalls.get() - listingsBefore == 1)
+    assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-12")))
   }
 
   test("distributed read-back: IngestReader decrypts every landed object to the original bytes") {
@@ -268,43 +333,28 @@ class IngestJobSpec extends AnyFunSuite {
     val (src, _) = makeSource()
     val out = Files.createTempDirectory("audit-out")
     val progress = Files.createTempDirectory("wm").resolve("progress.txt")
-    // Rotates to a second keypair after the first fetch.
-    val (pub2, priv2) = Envelope.generateKeyPair()
+    // A fresh keypair on every fetch: the n-th fetch's key must wrap the
+    // n-th day, which pins one fetch per pending day, in day order.
+    val pairs = Seq((pub, priv)) ++ Seq.fill(2)(Envelope.generateKeyPair())
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val rotating = new KeyProvider {
       override def wrappingKeyB64(): String = {
         val n = calls.incrementAndGet()
-        val k = if (n == 1) pub else pub2
-        Base64.getEncoder.encodeToString(k.getEncoded)
+        Base64.getEncoder.encodeToString(pairs(math.min(n, pairs.size) - 1)._1.getEncoded)
       }
     }
     val cfg = cfgFor(src, out, progress).copy(keyProvider = Some(rotating))
     IngestJob.run(spark, cfg)
     assert(calls.get() == 3) // one fetch per day
     val store = cfg.storeFactory.create()
-    // day 1 decrypts with key 1, day 3 with the rotated key 2
-    val k1 = "audit/2020-10-10/audit-data-1.json.gz.enc"
-    val k3 = "audit/2020-10-12/audit-data-1.json.gz.enc"
-    Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k1), store.getMetadata(k1)), priv))
-    Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k3), store.getMetadata(k3)), priv2))
-  }
-
-  test("processDayV2 targets an S3 store through the factory seam (--v2-sink + --s3-bucket)") {
-    val (src, contents) = makeSource()
-    val fake = new FakeS3Server("bkt", pageSize = 1000)
-    try {
-      val cfg = cfgFor(src, Files.createTempDirectory("unused"),
-        Files.createTempDirectory("wm").resolve("p.txt"))
-        .copy(storeFactory = S3ObjectStoreFactory(fake.endpoint, "eu-west-2", "bkt", "AKIDEXAMPLE", "sk"))
-      val dp = AuditSource.pendingDays(spark, cfg.srcDir, None).head
-      IngestJob.processDayV2(spark, cfg, dp) // pre-fix: ClassCastException on the local-dir cast
-      val store = cfg.storeFactory.create()
-      val keys = store.listKeys("audit/2020-10-10/")
-      assert(keys.size == 5)
-      val k = "audit/2020-10-10/audit-data-1.json.gz.enc"
-      val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), priv))
-      assert(plain.sameElements(contents("2020-10-10/audit-data-1.json")))
-    } finally fake.stop()
+    def unwrapsWith(k: String, key: java.security.PrivateKey): Boolean =
+      scala.util.Try(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), key)).isSuccess
+    // day n decrypts with the n-th fetched key and with no other
+    for ((day, n) <- Seq("2020-10-10", "2020-10-11", "2020-10-12").zipWithIndex) {
+      val k = s"audit/$day/audit-data-1.json.gz.enc"
+      Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), pairs(n)._2))
+      for (m <- pairs.indices if m != n) assert(!unwrapsWith(k, pairs(m)._2), s"$day opened with key ${m + 1}")
+    }
   }
 
   test("missing source dir raises (ref failure-path test)") {

@@ -3,6 +3,7 @@ package graft.ingest
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import scala.jdk.CollectionConverters._
 
 class WatermarkSpec extends AnyFunSuite {
   private def tmpFile(): String = {
@@ -35,6 +36,18 @@ class WatermarkSpec extends AnyFunSuite {
     Watermark.commit(f, LocalDate.parse("2020-10-11"))
     assert(Watermark.read(f).contains(LocalDate.parse("2020-10-11")))
     assert(new String(Files.readAllBytes(Paths.get(f))).trim == "2020-10-11")
+  }
+
+  test("a failed move leaves the target as it was and no temp file behind") {
+    val dir = Files.createTempDirectory("wm")
+    val target = Files.createDirectories(dir.resolve("progress.txt"))
+    Files.write(target.resolve("keep"), "old".getBytes)
+    intercept[java.io.IOException](Watermark.commit(target.toString, LocalDate.parse("2020-10-11")))
+    assert(Files.isDirectory(target))
+    assert(new String(Files.readAllBytes(target.resolve("keep"))) == "old")
+    val left = Files.list(dir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSeq == Seq("progress.txt"))
+    finally left.close()
   }
 
   test("parseDay: dated ok, non-dated None (ref :30-32)") {

@@ -73,31 +73,55 @@ class ObjectStoreSinkSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException](df.select("metadata").collect())
   }
 
-  test("processDayV2: encrypt day through the V2 writer, round-trip decrypt") {
+  /** Compress + envelope-encrypt `payloads` on the executors into the
+    * writer's `(key, data, metadata)` rows under `pfx/2024-02-02/`.
+    */
+  private def encryptedRows(pubB64: String, payloads: Seq[(String, String)]) = {
+    import spark.implicits._
+    payloads.toDS()
+      .mapPartitions { it =>
+        val pub = Envelope.publicKeyFromBase64(pubB64)
+        it.map { case (name, text) =>
+          val obj = Envelope.encrypt(Zlib.compress(text.getBytes("UTF-8")), pub, "kid")
+          (s"pfx/2024-02-02/$name.gz.enc", obj.ciphertext, obj.metadata)
+        }
+      }
+      .toDF("key", "data", "metadata")
+  }
+
+  private def decrypted(store: ObjectStore, key: String, priv: java.security.PrivateKey): String = {
+    val md = store.getMetadata(key)
+    assert(md.keySet == Set("iv", "ciphertext", "datakeyencryptionkeyid"), key)
+    new String(Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(key), md), priv)), "UTF-8")
+  }
+
+  test("DSv2 writer: envelope-encrypted objects round-trip decrypt") {
     val (pub, priv) = Envelope.generateKeyPair()
-    val src = Files.createTempDirectory("v2-src")
-    val day = Files.createDirectories(src.resolve("2024-02-02"))
-    Files.write(day.resolve("f1.json"), """{"a":1}""".getBytes)
-    Files.write(day.resolve("f2.json"), ("x" * 5000).getBytes)
     val out = Files.createTempDirectory("v2-out").toString
-    val cfg = IngestConfig(
-      src.toString,
-      LocalDirObjectStoreFactory(out),
-      "pfx/",
-      "kid",
-      Base64.getEncoder.encodeToString(pub.getEncoded),
-      Files.createTempDirectory("v2-wm").resolve("p.txt").toString
-    )
-    val dp = AuditSource.listDays(spark, src.toString).head
-    IngestJob.processDayV2(spark, cfg, dp)
+    val payloads = Seq("f1.json" -> """{"a":1}""", "f2.json" -> "x" * 5000)
+    encryptedRows(Base64.getEncoder.encodeToString(pub.getEncoded), payloads)
+      .write.format("graft-objects").option("root", out).mode("append").save()
 
     val store = new LocalDirObjectStore(out)
     val keys = store.listKeys("pfx/")
     assert(keys == Seq("pfx/2024-02-02/f1.json.gz.enc", "pfx/2024-02-02/f2.json.gz.enc"))
-    val md = store.getMetadata(keys.head)
-    assert(md.keySet == Set("iv", "ciphertext", "datakeyencryptionkeyid"))
-    val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(keys.head), md), priv))
-    assert(new String(plain) == """{"a":1}""")
+    assert(decrypted(store, keys.head, priv) == """{"a":1}""")
+    assert(decrypted(store, keys(1), priv) == "x" * 5000)
+  }
+
+  test("DSv2 writer targets an S3 store through the factory seam (StoreOptions.optionsFor)") {
+    val (pub, priv) = Envelope.generateKeyPair()
+    val fake = new FakeS3Server("bkt", pageSize = 1000)
+    try {
+      val factory = S3ObjectStoreFactory(fake.endpoint, "eu-west-2", "bkt", "AKIDEXAMPLE", "sk")
+      val payloads = (1 to 5).map(i => s"audit-data-$i.json" -> s"""{"id": "000$i"}""")
+      encryptedRows(Base64.getEncoder.encodeToString(pub.getEncoded), payloads)
+        .write.format("graft-objects").options(StoreOptions.optionsFor(factory)).mode("append").save()
+
+      val store = factory.create()
+      assert(store.listKeys("pfx/2024-02-02/").size == 5)
+      assert(decrypted(store, "pfx/2024-02-02/audit-data-1.json.gz.enc", priv) == """{"id": "0001"}""")
+    } finally fake.stop()
   }
 
   test("batch read lists the store exactly once per scan, even when Spark re-plans") {
