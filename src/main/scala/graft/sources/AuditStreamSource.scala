@@ -2,7 +2,9 @@ package graft.sources
 
 import java.time.LocalDate
 import java.util
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -149,7 +151,7 @@ private[sources] case class AuditFilesPartition(files: Seq[(String, Long, Int)])
     extends InputPartition // (path, length, epochDay)
 
 private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsTriggerAvailableNow with BroadcastHadoopConf {
   private val log = LoggerFactory.getLogger(getClass)
   private def spark = SparkSession.active
 
@@ -260,8 +262,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
     bins.map(b => AuditFilesPartition(b): InputPartition)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    AuditPartitionReaderFactory(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+  override def createReaderFactory(): PartitionReaderFactory = AuditPartitionReaderFactory(hadoopConf)
 
   /** Batch committed (offsets durably in the checkpoint log): mirror the
     * day into the reference-format progress file so batch and streaming
@@ -314,16 +315,16 @@ private[sources] object AuditMicroBatchStream {
   }
 }
 
-private[sources] case class AuditPartitionReaderFactory(conf: SerializableConfiguration)
+private[sources] case class AuditPartitionReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new AuditFileReader(partition.asInstanceOf[AuditFilesPartition], conf)
+    new AuditFileReader(partition.asInstanceOf[AuditFilesPartition], conf.value.value)
 }
 
 /** Reads each whole file into one row; one open stream at a time, constant
   * memory beyond the current file's bytes.
   */
-private[sources] class AuditFileReader(partition: AuditFilesPartition, conf: SerializableConfiguration)
+private[sources] class AuditFileReader(partition: AuditFilesPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
   private val it = partition.files.iterator
   private var current: InternalRow = _
@@ -336,7 +337,7 @@ private[sources] class AuditFileReader(partition: AuditFilesPartition, conf: Ser
     // silently truncating past the JVM array limit.
     require(len <= Int.MaxValue, s"$pathStr is $len bytes — exceeds the 2 GiB single-row limit")
     val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf.value)
+    val fs = path.getFileSystem(conf)
     val buf = new Array[Byte](len.toInt)
     val in = fs.open(path)
     try {

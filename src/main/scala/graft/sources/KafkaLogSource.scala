@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.util
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -76,10 +78,15 @@ import org.slf4j.LoggerFactory
   *  - **Offset = {topicPartition -> next offset to read}**, checkpointed
   *    by Spark's offset log — restart resumes exactly, at-least-once into
   *    an idempotent sink (the object store's overwrite-same-key).
-  *  - **One InputPartition per topic-partition per batch** — Kafka's own
-  *    parallelism model; a reader seeks into the segment containing its
-  *    start offset (segments are named by base offset, so the seek is a
-  *    filename binary search, not a scan).
+  *  - **Packed slices.** A batch plans one slice per topic-partition
+  *    with admitted records, its `[start, end)` plus the segments that
+  *    can hold it (segments are named by base offset, so choosing them is
+  *    a linear scan over the listed names, no file reads). The slices are
+  *    packed, largest first, into at most `defaultParallelism` input
+  *    partitions balanced by record count, so a batch of many small
+  *    slices runs as one wave of tasks; a task reads its slices in turn.
+  *    A reader header-skips every frame that ends below its slice's start
+  *    and decodes only the rest.
   *  - `maxRecordsPerTrigger` caps each batch's admitted records,
   *    distributed as a max-min fair share across partitions (equal
   *    splits, surplus from quiet partitions rolling to deep backlogs).
@@ -89,8 +96,9 @@ import org.slf4j.LoggerFactory
   * 100 TB posture: the driver holds only directory names and per-partition
   * offset longs; discovering a partition's log-end offset header-skips the
   * LAST segment only (seek past payloads, never reading them), and record
-  * bytes stream through executors. Parallelism = topic partitions, the
-  * same ceiling a real Kafka consumer group has.
+  * bytes stream through executors. A batch's parallelism is the smaller
+  * of its topic-partitions with admitted records (a slice is never split,
+  * the ceiling a real Kafka consumer group has) and `defaultParallelism`.
   */
 class KafkaLogSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-kafkalog"
@@ -559,23 +567,38 @@ object KafkaLogFormat {
     out.result()
   }
 
+  /** Bytes of a frame body that name its last offset: magic at 4, and
+    * v2's lastOffsetDelta at 11. Every frame has them (size >= 22).
+    */
+  private val BodyPrefixLen = 15
+
   /** Iterate records of a segment starting at its first frame, verifying
     * CRCs and dispatching v1 messages / gzip wrappers / v2 batches on the
-    * magic byte. `skipPayloadsOnly` = header scan for log-end discovery:
-    * reads at most 15 bytes per frame body (magic + v2's lastOffsetDelta)
-    * and yields ONE record per frame carrying the frame's LAST offset
-    * (v1 wrapper offset and v2 base+lastOffsetDelta already are that),
-    * with null key/value.
+    * magic byte. The segment is read in one forward pass through the
+    * stream's own position, with `seek` past any body that is not decoded;
+    * no positional `readFully(pos, ...)` is made, since on a checksummed
+    * local FS each one opens and closes the data and `.crc` files again.
+    *
+    * A frame's LAST offset comes from its header and the first 15 bytes of
+    * its body: the v1 message or wrapper offset, or the v2 base plus
+    * `lastOffsetDelta`. A frame whose last offset is below `from` is
+    * skipped there, never decoded nor CRC-checked, so a reader starting
+    * mid-segment does not decode what it would throw away.
+    * `skipPayloadsOnly` = header scan for log-end discovery: yields ONE
+    * record per frame carrying the frame's last offset, with null
+    * key/value.
     */
   def readSegment(
       in: org.apache.hadoop.fs.FSDataInputStream,
       segLen: Long,
       segPath: String,
-      skipPayloadsOnly: Boolean
+      skipPayloadsOnly: Boolean,
+      from: Long = Long.MinValue
   ): Iterator[Record] = new Iterator[Record] {
     private var pos = 0L
-    private val header = new Array[Byte](12)
+    private val header = new Array[Byte](12 + BodyPrefixLen)
     private var pending: Iterator[Record] = Iterator.empty
+    if (in.getPos != 0L) in.seek(0L)
 
     override def hasNext: Boolean = {
       while (!pending.hasNext && pos + 12 <= segLen) loadFrame()
@@ -588,29 +611,34 @@ object KafkaLogFormat {
     }
 
     private def loadFrame(): Unit = {
-      in.readFully(pos, header)
+      in.readFully(header, 0, 12)
       val hb = java.nio.ByteBuffer.wrap(header)
       val firstOffset = hb.getLong // v1: record/wrapper offset; v2: baseOffset
       val size = hb.getInt
       require(size >= 22 && pos + 12 + size <= segLen,
         s"$segPath: corrupt frame at byte $pos (frame_size=$size, segment=$segLen bytes)")
-      if (skipPayloadsOnly) {
-        val prefix = new Array[Byte](math.min(size, 15))
-        in.readFully(pos + 12, prefix)
-        val last = prefix(4) match {
-          case MagicV2 => firstOffset + java.nio.ByteBuffer.wrap(prefix, 11, 4).getInt
-          case _ => firstOffset
-        }
+      in.readFully(header, 12, BodyPrefixLen)
+      val last = header(12 + 4) match {
+        case MagicV2 => firstOffset + hb.getInt(12 + 11)
+        case _ => firstOffset
+      }
+      val next = pos + 12 + size
+      if (last < from) {
+        pending = Iterator.empty
+        in.seek(next)
+      } else if (skipPayloadsOnly) {
         pending = Iterator.single(Record(last, 0L, null, null))
+        in.seek(next)
       } else {
         val body = new Array[Byte](size)
-        in.readFully(pos + 12, body)
+        System.arraycopy(header, 12, body, 0, BodyPrefixLen)
+        in.readFully(body, BodyPrefixLen, size - BodyPrefixLen)
         pending = (body(4) match {
           case MagicV2 => decodeV2(firstOffset, body, segPath)
           case _ => decodeV1(firstOffset, body, segPath, allowWrapper = true)
         }).iterator
       }
-      pos += 12 + size
+      pos = next
     }
   }
 }
@@ -669,16 +697,23 @@ private[sources] object KafkaLogOffset {
 /** One topic-partition's admitted range plus its segment files
   * (path, length, baseOffset), sorted by base offset.
   */
-private[sources] case class KafkaLogPartition(
+private[sources] case class KafkaLogSlice(
     topic: String,
     partition: Int,
     startOffset: Long,
     endOffset: Long,
     segments: Seq[(String, Long, Long)]
-) extends InputPartition
+) {
+  def records: Long = endOffset - startOffset
+}
+
+/** One task's share of a batch: slices of distinct topic-partitions,
+  * read one after another.
+  */
+private[sources] case class KafkaLogPartition(slices: Seq[KafkaLogSlice]) extends InputPartition
 
 private[sources] class KafkaLogMicroBatchStream(root: String, options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsTriggerAvailableNow with BroadcastHadoopConf {
   private val log = LoggerFactory.getLogger(getClass)
   private def spark = SparkSession.active
   private val maxRecordsPerTrigger =
@@ -777,80 +812,124 @@ private[sources] class KafkaLogMicroBatchStream(root: String, options: CaseInsen
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     plan(start.asInstanceOf[KafkaLogOffset].offsets, end.asInstanceOf[KafkaLogOffset].offsets)
 
+  /** One slice per topic-partition with records in `[from, to)`, packed
+    * into at most `defaultParallelism` partitions so a batch runs as one
+    * wave of tasks ([[KafkaLogMicroBatchStream.pack]]). A topic-partition
+    * with nothing admitted yields no slice.
+    */
   private[sources] def plan(
       from: Map[String, Long],
       to: Map[String, Long]
   ): Array[InputPartition] = {
     val segs = listSegments()
-    to.toSeq.sorted.flatMap { case (tp, e) =>
+    val slices = to.toSeq.sorted.flatMap { case (tp, e) =>
       val s = from.getOrElse(tp, 0L)
       if (e <= s) None
       else {
         val TpDir(topic, pnum) = tp
         val all = segs.getOrElse(tp, Nil)
-        // keep segments that can contain [s, e): those whose successor's
-        // base is > s (filename binary search, no file reads)
+        // keep segments that can contain [s, e): a segment holds offsets
+        // from its base up to its successor's base (a linear scan over the
+        // listed names, no file reads)
         val wanted = all.zipWithIndex.filter { case (_, i) =>
           val nextBase = all.lift(i + 1).map(_._3).getOrElse(Long.MaxValue)
           nextBase > s && all(i)._3 < e
         }.map(_._1)
-        Some(KafkaLogPartition(topic, pnum.toInt, s, e, wanted): InputPartition)
+        Some(KafkaLogSlice(topic, pnum.toInt, s, e, wanted))
       }
-    }.toArray
+    }
+    KafkaLogMicroBatchStream
+      .pack(slices, spark.sparkContext.defaultParallelism)
+      .map(KafkaLogPartition(_): InputPartition)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    KafkaLogReaderFactory(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+  override def createReaderFactory(): PartitionReaderFactory = KafkaLogReaderFactory(hadoopConf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] case class KafkaLogReaderFactory(conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KafkaLogRecordReader(partition.asInstanceOf[KafkaLogPartition], conf)
+private[sources] object KafkaLogMicroBatchStream {
+
+  /** Pack slices into at most `bins` partitions balanced by admitted record
+    * count: largest slice first, each into the partition with the fewest
+    * records so far (ties to the lower index, so a plan is deterministic).
+    * The inverse of Spark's Kafka `minPartitions`: a batch of many small
+    * slices runs as one wave of tasks instead of several.
+    */
+  private[sources] def pack(slices: Seq[KafkaLogSlice], bins: Int): Array[Seq[KafkaLogSlice]] = {
+    val n = math.min(math.max(bins, 1), slices.size)
+    val packed = Array.fill(n)(Vector.empty[KafkaLogSlice])
+    val lightest = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](Ordering[(Long, Int)].reverse)
+    (0 until n).foreach(i => lightest.enqueue((0L, i)))
+    slices.sortBy(s => (-s.records, s.topic, s.partition)).foreach { s =>
+      val (load, i) = lightest.dequeue()
+      packed(i) :+= s
+      lightest.enqueue((load + s.records, i))
+    }
+    packed.map(_.toSeq)
+  }
 }
 
-/** Streams records of one topic-partition's admitted [start, end) range,
-  * one open segment at a time.
+private[sources] case class KafkaLogReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new KafkaLogRecordReader(partition.asInstanceOf[KafkaLogPartition], conf.value.value)
+}
+
+/** Streams the records of a partition's slices in turn, each slice's
+  * admitted [start, end) of one topic-partition, one open segment at a
+  * time. Frames that end below a slice's start are skipped undecoded.
   */
 private[sources] class KafkaLogRecordReader(
     p: KafkaLogPartition,
-    conf: SerializableConfiguration
+    conf: Configuration
 ) extends PartitionReader[InternalRow] {
-  private val topicUtf8 = UTF8String.fromString(p.topic)
-  private val segIt = p.segments.iterator
+  private val sliceIt = p.slices.iterator
+  private var slice: KafkaLogSlice = _
+  private var topicUtf8: UTF8String = _
+  private var segIt: Iterator[(String, Long, Long)] = Iterator.empty
   private var in: org.apache.hadoop.fs.FSDataInputStream = _
   private var recIt: Iterator[KafkaLogFormat.Record] = Iterator.empty
   private var current: InternalRow = _
 
-  private def openNextSegment(): Boolean = {
-    if (in != null) { in.close(); in = null }
-    if (!segIt.hasNext) return false
-    val (path, len, _) = segIt.next()
-    val hp = new Path(path)
-    in = hp.getFileSystem(conf.value).open(hp)
-    recIt = KafkaLogFormat.readSegment(in, len, path, skipPayloadsOnly = false)
-    true
+  /** Open the current slice's next segment, else start the next slice;
+    * false once every slice is drained.
+    */
+  private def advance(): Boolean = {
+    close()
+    if (segIt.hasNext) {
+      val (path, len, _) = segIt.next()
+      val hp = new Path(path)
+      in = hp.getFileSystem(conf).open(hp)
+      recIt = KafkaLogFormat.readSegment(in, len, path, skipPayloadsOnly = false, from = slice.startOffset)
+      true
+    } else if (sliceIt.hasNext) {
+      slice = sliceIt.next()
+      topicUtf8 = UTF8String.fromString(slice.topic)
+      segIt = slice.segments.iterator
+      true
+    } else false
   }
 
   override def next(): Boolean = {
     while (true) {
       if (recIt.hasNext) {
         val r = recIt.next()
-        if (r.offset >= p.endOffset) return false
-        if (r.offset >= p.startOffset) {
+        if (r.offset >= slice.endOffset) { // slice drained: skip its remaining segments
+          segIt = Iterator.empty
+          recIt = Iterator.empty
+        } else if (r.offset >= slice.startOffset) {
           current = new GenericInternalRow(Array[Any](
-            r.key, r.value, topicUtf8, p.partition, r.offset,
+            r.key, r.value, topicUtf8, slice.partition, r.offset,
             r.timestampMs * 1000L, KafkaLogFormat.CreateTime))
           return true
         }
-      } else if (!openNextSegment()) return false
+      } else if (!advance()) return false
     }
     false
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (in != null) in.close()
+  override def close(): Unit = if (in != null) { in.close(); in = null }
 }

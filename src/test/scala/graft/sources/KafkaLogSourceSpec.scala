@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -400,12 +401,124 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     assert(stream.reportLatestOffset() == KafkaLogOffset(Map("t-0" -> 7L)))
   }
 
+  /** Offsets read by draining every planned partition through the factory. */
+  private def drainPlanned(stream: KafkaLogMicroBatchStream, parts: Array[InputPartition]): Seq[(String, Long)] = {
+    val factory = stream.createReaderFactory()
+    parts.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      val out = Seq.newBuilder[(String, Long)]
+      try while (r.next()) out += ((s"${r.get().getUTF8String(2)}-${r.get().getInt(3)}", r.get().getLong(4)))
+      finally r.close()
+      out.result()
+    }
+  }
+
+  test("plan packs one slice per topic-partition into at most defaultParallelism partitions") {
+    val cores = spark.sparkContext.defaultParallelism
+    val tps = cores + 3
+    val root = Files.createTempDirectory("klog-pack")
+    (0 until tps).foreach(p => writeTp(root, s"t-$p", (0L until (3L + p)).map(o => rec(o, s"v$p-$o"))))
+    val stream = cappedStream(root, 1000)
+    // t-0 admits nothing (start == end); every other slice starts at 1
+    val from = (0 until tps).map(p => s"t-$p" -> 1L).toMap + ("t-0" -> 3L)
+    val to = (0 until tps).map(p => s"t-$p" -> (3L + p)).toMap
+    val planned = stream.plan(from, to)
+    val parts = planned.map(_.asInstanceOf[KafkaLogPartition])
+    assert(parts.length == cores, "more slices than cores: one partition per core")
+    val slices = parts.toSeq.flatMap(_.slices)
+    assert(slices.map(s => s"${s.topic}-${s.partition}").sorted == (1 until tps).map(p => s"t-$p").sorted,
+      "each admitted slice in exactly one partition; the empty slice in none")
+    slices.foreach(s => assert(s.startOffset == 1L && s.endOffset == 3L + s.partition))
+    // largest first into the lightest partition: loads end within one slice of each other
+    val loads = parts.map(_.slices.map(_.records).sum)
+    assert(loads.max - loads.min <= slices.map(_.records).max, s"unbalanced: ${loads.toSeq}")
+    assert(drainPlanned(stream, planned).sorted ==
+      (1 until tps).flatMap(p => (1L until 3L + p).map(o => (s"t-$p", o))).sorted,
+      "a packed reader drains each of its slices, start to end, once")
+
+    // fewer slices than cores: one partition each, nothing empty
+    val two = stream.plan(Map.empty, Map("t-1" -> 2L, "t-2" -> 5L)).map(_.asInstanceOf[KafkaLogPartition])
+    assert(two.map(_.slices.map(s => (s.topic, s.partition, s.startOffset, s.endOffset))).toSeq ==
+      Seq(Seq(("t", 2, 0L, 5L)), Seq(("t", 1, 0L, 2L))))
+    assert(stream.plan(Map("t-1" -> 4L), Map("t-1" -> 4L)).isEmpty, "nothing admitted, no partition")
+  }
+
+  test("the reader factory carries one broadcast conf per stream, not the conf itself") {
+    val root = Files.createTempDirectory("klog-conf")
+    writeTp(root, "t-0", Seq(rec(0, "x")))
+    val stream = cappedStream(root, 10)
+    val f1 = stream.createReaderFactory().asInstanceOf[KafkaLogReaderFactory]
+    val f2 = stream.createReaderFactory().asInstanceOf[KafkaLogReaderFactory]
+    assert(f1.conf.id == f2.conf.id, "every batch of a stream shares one broadcast")
+    assert(cappedStream(root, 10).createReaderFactory().asInstanceOf[KafkaLogReaderFactory].conf.id != f1.conf.id)
+    val audit = new AuditMicroBatchStream(root.toString, new CaseInsensitiveStringMap(Map("srcDir" -> root.toString).asJava))
+    val a1 = audit.createReaderFactory().asInstanceOf[AuditPartitionReaderFactory]
+    assert(audit.createReaderFactory().asInstanceOf[AuditPartitionReaderFactory].conf.id == a1.conf.id)
+    def serializedBytes(o: AnyRef): Int = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bos)
+      out.writeObject(o); out.close()
+      bos.size()
+    }
+    val confBytes = serializedBytes(new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    Seq(f1, a1).foreach { f =>
+      assert(serializedBytes(f) * 10 < confBytes, s"$f ships ${serializedBytes(f)} bytes; the conf is $confBytes")
+    }
+  }
+
+  test("frames that end below the start offset are skipped undecoded; a read that covers them still checks CRCs") {
+    val root = Files.createTempDirectory("klog-skip")
+    val frames = (0L until 4L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
+      Seq(KafkaLogFormat.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
+      (7L until 10L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o")))
+    // flip the last payload byte of the v1 frame at offset 1 and of the v2 batch (4..6)
+    val bytes = frames.reduce(_ ++ _)
+    def flipLastByteOf(frame: Int): Unit = {
+      val at = frames.take(frame + 1).map(_.length).sum - 1
+      bytes(at) = (bytes(at) ^ 0x01).toByte
+    }
+    flipLastByteOf(1)
+    flipLastByteOf(4)
+    val dir = root.resolve("t-0")
+    Files.createDirectories(dir)
+    val segFile = dir.resolve(KafkaLogFormat.segmentName(0))
+    Files.write(segFile, bytes)
+    val seg = new Path(segFile.toString)
+
+    def offsetsFrom(from: Long): List[Long] = {
+      val in = fs.open(seg)
+      try KafkaLogFormat.readSegment(in, bytes.length, seg.toString, skipPayloadsOnly = false, from = from)
+        .map(_.offset).toList
+      finally in.close()
+    }
+    assert(offsetsFrom(7L) == List(7L, 8L, 9L), "both corrupt frames end below 7: never decoded")
+    val stream = cappedStream(root, 100)
+    assert(drainPlanned(stream, stream.plan(Map("t-0" -> 7L), Map("t-0" -> 9L))).map(_._2) == Seq(7L, 8L))
+    // the v2 batch ends at 6: a start of 5 or 6 decodes it
+    assert(intercept[IllegalArgumentException](offsetsFrom(6L)).getMessage.contains("CRC-32C mismatch"))
+    assert(intercept[IllegalArgumentException](offsetsFrom(2L)).getMessage.contains("CRC-32C mismatch"))
+    assert(intercept[IllegalArgumentException](offsetsFrom(0L)).getMessage.contains("CRC mismatch at offset 1"))
+    val e = intercept[IllegalArgumentException] {
+      drainPlanned(stream, stream.plan(Map("t-0" -> 1L), Map("t-0" -> 3L)))
+    }
+    assert(e.getMessage.contains("CRC mismatch at offset 1"), e.getMessage)
+    // the log-end header skim reads no body past its 15-byte prefix either
+    val hin = fs.open(seg)
+    try assert(KafkaLogFormat.readSegment(hin, bytes.length, seg.toString, skipPayloadsOnly = true)
+      .map(_.offset).toList == List(0L, 1L, 2L, 3L, 6L, 7L, 8L, 9L))
+    finally hin.close()
+  }
+
   test("batch read form scans offset 0 to log end") {
+    // more topic-partitions than cores: the batch scan packs them too
+    val cores = spark.sparkContext.defaultParallelism
     val root = Files.createTempDirectory("klog-batch")
-    writeTp(root, "b-0", (0L until 4L).map(o => rec(o, s"v$o")))
+    (0 until cores + 2).foreach(p => writeTp(root, s"b-$p", (0L until (2L + p)).map(o => rec(o, s"v$p-$o"))))
     val df = spark.read.format("graft-kafkalog").option("root", root.toString).load()
-    assert(df.count() == 4)
-    assert(df.filter(org.apache.spark.sql.functions.col("offset") === 3L).count() == 1)
+    assert(df.rdd.getNumPartitions == cores)
+    val got = df.select("partition", "offset").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(got.sorted == (0 until cores + 2).flatMap(p => (0L until 2L + p).map(o => (p, o))))
+    assert(df.filter(org.apache.spark.sql.functions.col("offset") === 3L).count() == cores, "b-2 and up hold offset 3")
   }
 
   test("north star end-to-end: kafka-format stream -> object-store sink, keyed by topic/partition/offset") {

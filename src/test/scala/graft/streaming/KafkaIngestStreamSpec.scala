@@ -8,6 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.Base64
 
+/** Failure-injection store: the put of exactly `badKey` fails, every other
+  * put lands.
+  */
+final case class OneBadKeyStoreFactory(root: String, badKey: String) extends ObjectStoreFactory {
+  override def create(): ObjectStore = new LocalDirObjectStore(root) {
+    override def put(key: String, data: Array[Byte], metadata: Map[String, String]): Unit = {
+      if (key == badKey) throw new RuntimeException(s"injected failure for $key")
+      super.put(key, data, metadata)
+    }
+  }
+}
+
 /** The literal north star as ONE library call: Kafka-wire-format source →
   * compress → envelope-encrypt → object-store sink
   * ([[IngestStream.runKafkaAvailableNow]]). Pins key layout, decrypt
@@ -117,6 +129,50 @@ class KafkaIngestStreamSpec extends AnyFunSuite {
     assert(summary == KafkaDrainSummary(batches = 4, records = live.size.toLong, tombstones = 7))
     assert(jobsPerBatch.toMap == (0 until 4).map(b => b.toString -> 1).toMap,
       s"jobs per micro-batch: $jobsPerBatch")
+  }
+
+  test("poisoned record: the batch fails naming it, the committed offset holds, a fixed store re-drains exactly") {
+    // more topic-partitions than cores, so a packed task reads several slices
+    val partitions = spark.sparkContext.defaultParallelism + 2
+    val root = Files.createTempDirectory("kpoison")
+    for (p <- 0 until partitions) {
+      val tp = new Path(root.resolve(s"audit-$p").toString)
+      fs.mkdirs(tp)
+      KafkaLogFormat.writeSegment(fs, tp, (0L until 6L).map { o =>
+        if (p == 1 && o == 4L) KafkaLogFormat.Record(o, dayMs + o, null, null) else rec(o, s"p$p-$o")
+      })
+    }
+    val out = Files.createTempDirectory("kpoison-out")
+    val checkpoint = Files.createTempDirectory("kpoison-ckpt").toString
+    val cfg = cfgFor(out)
+    // a cap of 2 per partition admits offsets [2b, 2b+2) of each partition
+    // in batch b; the poisoned record sits in batch 1
+    val cap = Some(2L * partitions)
+    val bad = "audit/2021-07-15/audit-2-3.gz.enc"
+    val e = intercept[Exception] {
+      IngestStream.runKafkaAvailableNow(
+        spark, cfg.copy(storeFactory = OneBadKeyStoreFactory(out.toString, bad)), root.toString, checkpoint, cap)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(messages.contains("Kafka batch 1: 1 record(s) failed") && messages.contains(bad), messages)
+
+    // the checkpoint committed batch 0 only, and its end offset is 2 everywhere
+    val ckptFs = new Path(checkpoint).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val committed = ckptFs.listStatus(new Path(checkpoint, "commits")).map(_.getPath.getName).filter(_.forall(_.isDigit))
+    assert(committed.toSeq == Seq("0"))
+    val offsets0 = scala.io.Source.fromFile(new java.io.File(checkpoint, "offsets/0"))
+    val committedEnd = try offsets0.getLines().toList.last finally offsets0.close()
+    assert(committedEnd == (0 until partitions).map(p => s""""audit-$p":2""").sorted.mkString("{", ",", "}"))
+
+    // a rerun with a working store re-drains from there; the landed keys are the live records, no more
+    val summary = IngestStream.runKafkaAvailableNow(spark, cfg, root.toString, checkpoint, cap)
+    assert(summary == KafkaDrainSummary(batches = 2, records = 2L * 2 * partitions - 1, tombstones = 1))
+    val live = for (p <- 0 until partitions; o <- 0L until 6L if !(p == 1 && o == 4L))
+      yield s"audit/2021-07-15/audit-$p-$o.gz.enc"
+    val store = cfg.storeFactory.create()
+    assert(store.listKeys("audit/").toSet == live.toSet)
+    val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(bad), store.getMetadata(bad)), priv))
+    assert(new String(plain, "UTF-8") == "p2-3")
   }
 
   test("--kafka-root CLI flag requires --streaming") {
