@@ -4,7 +4,7 @@ import java.security.PublicKey
 import java.time.LocalDate
 import scala.collection.mutable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
 
@@ -103,12 +103,14 @@ final case class IngestSummary(days: Seq[DayResult]) {
   *    during a run takes effect at the next run.
   *
   * Scale notes (100 TB posture): no driver-side staging or collect of
-  * content — executors read their own binaryFile splits and upload from
+  * content — executors read their own whole files through one
+  * `graft-audit` scan ([[AuditSource.readPending]]) and upload from
   * `mapPartitions`; only one aggregated status row per task and day comes
   * back to the driver (counts + a bounded failure sample), so the gather is
-  * O(#tasks) regardless of file count. Parallelism = source bytes /
-  * `spark.sql.files.maxPartitionBytes` over the whole backlog, no shuffle
-  * anywhere in the plan.
+  * O(#tasks) regardless of file count. The backlog's files are bin-packed
+  * into tasks of at most `min(128 MiB, ceil(backlog bytes /
+  * defaultParallelism))`, so a small backlog still fills every core and a
+  * large one runs in 128 MiB tasks; no shuffle anywhere in the plan.
   */
 object IngestJob {
   private val log = LoggerFactory.getLogger(getClass)
@@ -121,17 +123,13 @@ object IngestJob {
     * naming it, with the earlier days committed.
     */
   def run(spark: SparkSession, cfg: IngestConfig): IngestSummary = {
-    import spark.implicits._
     val watermark = Watermark.read(cfg.progressFile)
     val days = AuditSource.pendingDays(spark, cfg.srcDir, watermark)
     log.info(s"Watermark=$watermark; ${days.size} pending day(s) in one job")
     if (days.isEmpty) return IngestSummary(Nil)
     val keys = days.map(dp => dp.day.toString -> cfg.wrappingKeyB64()).toMap // per day, in day order (ref :78)
     val dayDirs = days.map(dp => dp.day.toString -> new Path(dp.path).toUri.getPath).toMap
-    val files = AuditSource
-      .readPending(spark, days)
-      .select(col("path"), col("content"), col("day").cast("string"))
-      .as[(String, Array[Byte], String)]
+    val files = auditRows(AuditSource.readPending(spark, cfg.srcDir, days))
     val uploaded = uploadFiles(files, cfg, keys, dayDirs).map(r => r.day -> r).toMap
     val results = days.map(dp => uploaded.getOrElse(dp.day, DayResult(dp.day, 0L, 0L, Nil)))
     results.foreach { r =>
@@ -144,6 +142,15 @@ object IngestJob {
       Watermark.commit(cfg.progressFile, r.day)
     }
     IngestSummary(results)
+  }
+
+  /** A `graft-audit` scan's `(path, content, day)` rows as the
+    * `(path, content, dayStr)` that [[uploadFiles]] takes: the one shape in
+    * which the batch core and the day stream feed it.
+    */
+  private[ingest] def auditRows(scan: DataFrame): Dataset[(String, Array[Byte], String)] = {
+    import scan.sparkSession.implicits._
+    scan.select(col("path"), col("content"), col("day").cast("string")).as[(String, Array[Byte], String)]
   }
 
   /** Path of `filePath` relative to the (normalized) day directory; falls

@@ -47,12 +47,8 @@ object IngestStream {
     * keys stay correct regardless.
     */
   private[ingest] def processBatch(cfg: IngestConfig, batch: DataFrame, batchId: Long): Unit = {
-    import batch.sparkSession.implicits._
     val srcRootNorm = new org.apache.hadoop.fs.Path(cfg.srcDir).toUri.getPath
-    val files = batch
-      .select("path", "content", "day")
-      .as[(String, Array[Byte], java.sql.Date)]
-      .map { case (path, content, day) => (path, content, day.toLocalDate.toString) }
+    val files = IngestJob.auditRows(batch)
     val pubB64 = cfg.wrappingKeyB64() // one fetch per micro-batch (ref :78)
     val summary = IngestSummary(IngestJob.uploadFiles(files, cfg, _ => pubB64, dayStr => s"$srcRootNorm/$dayStr"))
     if (summary.filesFailed > 0)

@@ -3,7 +3,7 @@ package graft.sources
 import java.time.LocalDate
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.slf4j.LoggerFactory
-import graft.ingest.{AuditSource, Watermark}
+import graft.ingest.{AuditSource, DayPartition, Watermark}
 
 /** DataSource V2 STREAMING source over the reference's dated-directory
   * audit drop (audit_data_ingest.py:129-150) — the pipeline's incremental
@@ -48,13 +48,21 @@ import graft.ingest.{AuditSource, Watermark}
   *    the reference-format watermark file ([[SparkDataStream.commit]]),
   *    keeping the batch core and the stream interchangeable.
   *
+  * The batch form, `spark.read.format("graft-audit")`, reads every day
+  * after the optional watermark in one scan; with the `days` option
+  * ([[AuditStreamSourceProvider.daysOption]]) it reads exactly the listed
+  * days and lists no day directory itself ([[AuditSource.readPending]],
+  * the batch core's one scan).
+  *
   * 100 TB posture: the driver holds only day names and file metadata
-  * (path, length) for the ONE day being admitted; content bytes are read
-  * by executors straight from the source filesystem. Files are bin-packed
-  * into input partitions by size (`maxPartitionBytes`, default 128 MiB) —
-  * parallelism scales with day bytes, not file count, and zero-length
-  * files are included (the custom reader has no scan that drops them,
-  * unlike `binaryFile` — see [[AuditSource.readDay]]).
+  * (path, length) for the days being planned; content bytes are read by
+  * executors straight from the source filesystem. A day is listed by a
+  * recursive `listStatus` walk. Files are bin-packed into input partitions
+  * of at most `min(maxPartitionBytes, ceil(bytes / defaultParallelism))`
+  * ([[AuditMicroBatchStream.binCap]]; `maxPartitionBytes` defaults to
+  * 128 MiB), so parallelism scales with bytes, not file count, and a small
+  * batch still spreads over every core. Zero-length files are read like
+  * any other.
   */
 class AuditStreamSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-audit"
@@ -75,6 +83,25 @@ object AuditStreamSourceProvider {
     StructField("content", BinaryType, nullable = false),
     StructField("day", DateType, nullable = false)
   ))
+
+  /** Batch-scan option naming the exact days to read. */
+  val DaysOption = "days"
+
+  /** The [[DaysOption]] value for `days`: one `day dir` line each. The dir
+    * is passed as listed, since a day's name cannot be rebuilt from its
+    * date ([[Watermark.parseDay]] reads `2021-02-30` as 2021-02-28).
+    */
+  def daysOption(days: Seq[DayPartition]): String =
+    days.map { dp =>
+      require(!dp.path.contains('\n'), s"day dir name holds a line break: ${dp.path}")
+      s"${dp.day} ${dp.path}"
+    }.mkString("\n")
+
+  private[sources] def parseDays(value: String): Seq[DayPartition] =
+    value.split('\n').toSeq.filter(_.nonEmpty).map { line =>
+      val sp = line.indexOf(' ')
+      DayPartition(LocalDate.parse(line.substring(0, sp)), line.substring(sp + 1))
+    }
 }
 
 private[sources] class AuditStreamTable(options: CaseInsensitiveStringMap)
@@ -94,30 +121,36 @@ private[sources] class AuditStreamTable(options: CaseInsensitiveStringMap)
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = AuditStreamSourceProvider.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+          require(!options.containsKey(AuditStreamSourceProvider.DaysOption),
+            s"option '${AuditStreamSourceProvider.DaysOption}' is for batch reads only")
           new AuditMicroBatchStream(srcDir, options)
-        // Batch form: ALL days after the watermark in one scan — the
-        // manifest/analytics view of the same source
-        // (`spark.read.format("graft-audit")`), sharing the streaming
-        // reader's listing, bin-packing, and whole-file reader. ONE batch
-        // per Scan: Spark's planner may call toBatch more than once while
-        // building/cloning the physical plan, and each listing is a real
-        // RPC against the source filesystem.
+        }
+        // Batch form: the listed days, or ALL days after the watermark, in
+        // one scan, sharing the streaming reader's listing, bin-packing
+        // and whole-file reader. ONE batch per Scan: Spark's planner may
+        // call toBatch more than once while building/cloning the physical
+        // plan, and each listing is a real RPC against the source
+        // filesystem.
         private lazy val batch = new AuditBatchScan(srcDir, options)
         override def toBatch: Batch = batch
       }
     }
 }
 
-/** One-shot batch scan of every pending day (strict `>` the optional
-  * `startDay`/`progressFile` watermark, like the stream's initial offset).
+/** One-shot batch scan of the days the `days` option names, else of every
+  * pending day (strict `>` the optional `startDay`/`progressFile`
+  * watermark, like the stream's initial offset).
   */
 private[sources] class AuditBatchScan(srcDir: String, options: CaseInsensitiveStringMap) extends Batch {
-  // ONE stream per scan, ONE day-listing per plan (the previous shape
-  // built a fresh stream per method call and listed the source three
-  // times per scan; IngestStreamSpec pins the listing count now).
+  // ONE stream per scan and at most ONE day-listing per plan (none when
+  // the days are given); IngestStreamSpec and IngestJobSpec pin the count.
   private val stream = new AuditMicroBatchStream(srcDir, options)
-  private lazy val planned: Array[InputPartition] = stream.planAllPending()
+  private lazy val planned: Array[InputPartition] =
+    Option(options.get(AuditStreamSourceProvider.DaysOption)) match {
+      case Some(days) => stream.planDays(AuditStreamSourceProvider.parseDays(days), "(listed days)")
+      case None => stream.planAllPending()
+    }
 
   override def planInputPartitions(): Array[InputPartition] = planned
 
@@ -222,8 +255,8 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
     AuditDayOffset(lastListedDay.getOrElse(AuditSource.listDays(spark, srcDir).lastOption.map(_.day)))
 
   /** Plan the files of every day in (start, end] — normally exactly one
-    * day — bin-packed into ~maxPartitionBytes partitions. Driver state is
-    * O(#files-in-batch) metadata; bytes stay on the executors.
+    * day — bin-packed by [[planDays]]. Driver state is O(#files-in-batch)
+    * metadata; bytes stay on the executors.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val startWm = start.asInstanceOf[AuditDayOffset].day
@@ -242,23 +275,22 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
     planDays(AuditSource.pendingDays(spark, srcDir, wm), s"(${wm.getOrElse("-")}, *]")
   }
 
-  private def planDays(days: Seq[graft.ingest.DayPartition], range: String): Array[InputPartition] = {
+  /** Every file under each of `days`, nested ones included, tagged with
+    * the day it was listed under, bin-packed to the [[AuditMicroBatchStream.binCap]].
+    */
+  private[sources] def planDays(days: Seq[DayPartition], range: String): Array[InputPartition] = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val files = days.flatMap { dp =>
       val p = new Path(dp.path)
-      val fs = p.getFileSystem(hadoopConf)
-      val it = fs.listFiles(p, /* recursive = */ true)
       val epochDay = dp.day.toEpochDay.toInt
-      Iterator
-        .continually(it)
-        .takeWhile(_.hasNext)
-        .map(_.next())
-        .filter(_.isFile)
+      AuditMicroBatchStream
+        .filesUnder(p.getFileSystem(hadoopConf), p)
         .map(st => (st.getPath.toString, st.getLen, epochDay))
-        .toSeq
     }
-    val bins = AuditMicroBatchStream.binPack(files, maxPartitionBytes)
-    log.info(s"Batch $range: ${files.size} file(s) in ${bins.length} partition(s)")
+    val cap = AuditMicroBatchStream.binCap(
+      files.iterator.map(_._2).sum, maxPartitionBytes, spark.sparkContext.defaultParallelism)
+    val bins = AuditMicroBatchStream.binPack(files, cap)
+    log.info(s"Batch $range: ${files.size} file(s) in ${bins.length} partition(s) of at most $cap bytes")
     bins.map(b => AuditFilesPartition(b): InputPartition)
   }
 
@@ -278,6 +310,24 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
 }
 
 private[sources] object AuditMicroBatchStream {
+
+  /** Every file under `dir`, by a recursive `listStatus` walk. Not
+    * `listFiles`: it wraps each status in a `LocatedFileStatus`, whose
+    * constructor reads the owner and permission, and Hadoop's local FS
+    * without libhadoop forks an `ls -ld` per file to get them.
+    */
+  private def filesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap(st => if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
+
+  /** Largest bin for `totalBytes` over `cores`: `maxPartitionBytes`, or
+    * less so that the bytes spread over every core (Spark's own
+    * `maxSplitBytes` rule for file scans). At least 1, so zero-length
+    * files share a bin.
+    */
+  private[sources] def binCap(totalBytes: Long, maxPartitionBytes: Long, cores: Int): Long = {
+    val n = math.max(cores, 1)
+    math.max(1L, math.min(maxPartitionBytes, (totalBytes + n - 1) / n))
+  }
 
   /** Best-fit-decreasing bin-packing by file size, O(n log bins) via a
     * remaining-capacity index — a first-fit linear scan over bins is

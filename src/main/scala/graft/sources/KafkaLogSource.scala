@@ -567,8 +567,9 @@ object KafkaLogFormat {
     out.result()
   }
 
-  /** Bytes of a frame body that name its last offset: magic at 4, and
-    * v2's lastOffsetDelta at 11. Every frame has them (size >= 22).
+  /** Bytes of a frame body that name its first and last offsets: magic at
+    * 4, v1's attributes at 5 (a wrapper or not) and v2's lastOffsetDelta
+    * at 11. Every frame has them (size >= 22).
     */
   private val BodyPrefixLen = 15
 
@@ -583,17 +584,21 @@ object KafkaLogFormat {
     * its body: the v1 message or wrapper offset, or the v2 base plus
     * `lastOffsetDelta`. A frame whose last offset is below `from` is
     * skipped there, never decoded nor CRC-checked, so a reader starting
-    * mid-segment does not decode what it would throw away.
-    * `skipPayloadsOnly` = header scan for log-end discovery: yields ONE
-    * record per frame carrying the frame's last offset, with null
-    * key/value.
+    * mid-segment does not decode what it would throw away. Likewise a
+    * frame whose FIRST offset is at or past `until` ends the iterator
+    * there, its body past the prefix unread: a reader stopping at a slice
+    * end does not decode the next slice's first frame. A frame that
+    * straddles `until` is still decoded whole. `skipPayloadsOnly` =
+    * header scan for log-end discovery: yields ONE record per frame
+    * carrying the frame's last offset, with null key/value.
     */
   def readSegment(
       in: org.apache.hadoop.fs.FSDataInputStream,
       segLen: Long,
       segPath: String,
       skipPayloadsOnly: Boolean,
-      from: Long = Long.MinValue
+      from: Long = Long.MinValue,
+      until: Long = Long.MaxValue
   ): Iterator[Record] = new Iterator[Record] {
     private var pos = 0L
     private val header = new Array[Byte](12 + BodyPrefixLen)
@@ -613,32 +618,38 @@ object KafkaLogFormat {
     private def loadFrame(): Unit = {
       in.readFully(header, 0, 12)
       val hb = java.nio.ByteBuffer.wrap(header)
-      val firstOffset = hb.getLong // v1: record/wrapper offset; v2: baseOffset
+      val headerOffset = hb.getLong // v1: record/wrapper offset; v2: baseOffset
       val size = hb.getInt
       require(size >= 22 && pos + 12 + size <= segLen,
         s"$segPath: corrupt frame at byte $pos (frame_size=$size, segment=$segLen bytes)")
       in.readFully(header, 12, BodyPrefixLen)
-      val last = header(12 + 4) match {
-        case MagicV2 => firstOffset + hb.getInt(12 + 11)
-        case _ => firstOffset
+      // a v1 wrapper's header names its LAST inner offset; its first is
+      // known only once inflated, so it never ends the range unread
+      val (first, last) = header(12 + 4) match {
+        case MagicV2 => (headerOffset, headerOffset + hb.getInt(12 + 11))
+        case _ if (header(12 + 5) & 0x07) != NoCodec => (Long.MinValue, headerOffset)
+        case _ => (headerOffset, headerOffset)
       }
       val next = pos + 12 + size
-      if (last < from) {
-        pending = Iterator.empty
-        in.seek(next)
-      } else if (skipPayloadsOnly) {
-        pending = Iterator.single(Record(last, 0L, null, null))
-        in.seek(next)
-      } else {
-        val body = new Array[Byte](size)
-        System.arraycopy(header, 12, body, 0, BodyPrefixLen)
-        in.readFully(body, BodyPrefixLen, size - BodyPrefixLen)
-        pending = (body(4) match {
-          case MagicV2 => decodeV2(firstOffset, body, segPath)
-          case _ => decodeV1(firstOffset, body, segPath, allowWrapper = true)
-        }).iterator
+      if (first >= until) pos = segLen // starts past the range: end here
+      else {
+        if (last < from) {
+          pending = Iterator.empty
+          in.seek(next)
+        } else if (skipPayloadsOnly) {
+          pending = Iterator.single(Record(last, 0L, null, null))
+          in.seek(next)
+        } else {
+          val body = new Array[Byte](size)
+          System.arraycopy(header, 12, body, 0, BodyPrefixLen)
+          in.readFully(body, BodyPrefixLen, size - BodyPrefixLen)
+          pending = (body(4) match {
+            case MagicV2 => decodeV2(headerOffset, body, segPath)
+            case _ => decodeV1(headerOffset, body, segPath, allowWrapper = true)
+          }).iterator
+        }
+        pos = next
       }
-      pos = next
     }
   }
 }
@@ -879,7 +890,9 @@ private[sources] case class KafkaLogReaderFactory(conf: Broadcast[SerializableCo
 
 /** Streams the records of a partition's slices in turn, each slice's
   * admitted [start, end) of one topic-partition, one open segment at a
-  * time. Frames that end below a slice's start are skipped undecoded.
+  * time. Frames that end below a slice's start are skipped undecoded, and
+  * a segment is read no further than the first frame that starts at or
+  * past the slice's end.
   */
 private[sources] class KafkaLogRecordReader(
     p: KafkaLogPartition,
@@ -902,7 +915,8 @@ private[sources] class KafkaLogRecordReader(
       val (path, len, _) = segIt.next()
       val hp = new Path(path)
       in = hp.getFileSystem(conf).open(hp)
-      recIt = KafkaLogFormat.readSegment(in, len, path, skipPayloadsOnly = false, from = slice.startOffset)
+      recIt = KafkaLogFormat.readSegment(
+        in, len, path, skipPayloadsOnly = false, from = slice.startOffset, until = slice.endOffset)
       true
     } else if (sliceIt.hasNext) {
       slice = sliceIt.next()

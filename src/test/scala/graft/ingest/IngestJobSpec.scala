@@ -71,19 +71,29 @@ class IngestJobSpec extends AnyFunSuite {
       progressFile = progress.toString
     )
 
-  /** Runs `f` and counts the Spark jobs it submits from this thread. A
-    * marker job submitted after `f` arrives behind them on the listener bus
-    * (one thread, in order), so once it arrives the count is complete.
-    */
+  /** Runs `f` and counts the Spark jobs it submits from this thread. */
   private def countingJobs[T](f: => T): (T, Int) = {
+    val (out, jobs, _) = countingJobsAndTasks(f)
+    (out, jobs)
+  }
+
+  /** Runs `f` and counts the Spark jobs it submits from this thread and
+    * the tasks their stages plan. A marker job submitted after `f` arrives
+    * behind them on the listener bus (one thread, in order), so once it
+    * arrives the counts are complete.
+    */
+  private def countingJobsAndTasks[T](f: => T): (T, Int, Int) = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val props = Option(js.properties)
         if (props.exists(_.getProperty("ingest.spec.marker") != null)) drained.countDown()
-        else if (props.exists(_.getProperty("ingest.spec.counted") != null)) jobs.incrementAndGet()
+        else if (props.exists(_.getProperty("ingest.spec.counted") != null)) {
+          jobs.incrementAndGet()
+          tasks.addAndGet(js.stageInfos.map(_.numTasks).sum)
+        }
       }
     }
     sc.addSparkListener(listener)
@@ -94,7 +104,7 @@ class IngestJobSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty("ingest.spec.marker", null)
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      (out, jobs.get())
+      (out, jobs.get(), tasks.get())
     } finally sc.removeSparkListener(listener)
   }
 
@@ -122,6 +132,60 @@ class IngestJobSpec extends AnyFunSuite {
     val k = "audit/2020-10-11/audit-data-1.json.gz.enc"
     val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), priv))
     assert(plain.sameElements(contents("2020-10-11/audit-data-1.json")))
+  }
+
+  test("run: a backlog of more files than cores lands in ONE job of fewer tasks than files, cores to 2x cores") {
+    val cores = spark.sparkContext.defaultParallelism
+    val src = Files.createTempDirectory("audit-src-wide")
+    val days = Seq("2020-11-01", "2020-11-02", "2020-11-03")
+    val files = 3 * cores + 1
+    val rnd = new Random(3)
+    for (i <- 0 until files) {
+      val bytes = new Array[Byte](64 * 1024)
+      rnd.nextBytes(bytes)
+      Files.write(Files.createDirectories(src.resolve(days(i % days.size))).resolve(f"f-$i%03d.bin"), bytes)
+    }
+    val out = Files.createTempDirectory("wide-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    val cfg = cfgFor(src, out, progress)
+
+    val (summary, jobs, tasks) = countingJobsAndTasks(IngestJob.run(spark, cfg))
+
+    assert(summary.filesOk == files)
+    assert(jobs == 1, s"run scheduled $jobs Spark job(s); expected exactly 1")
+    assert(tasks < files, s"$tasks task(s) for $files files: one task per file")
+    assert(tasks <= 2 * cores, s"$tasks task(s) on $cores cores")
+    assert(tasks >= cores, s"$tasks task(s) leave some of $cores cores idle")
+    assert(cfg.storeFactory.create().listKeys("audit/").size == files)
+    assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-11-03")))
+  }
+
+  test("run: a day created during the first key fetch is neither read nor committed; the next run lands it") {
+    val (src, _) = makeSource()
+    val out = Files.createTempDirectory("audit-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    val late = src.resolve("2020-10-13")
+    val fetches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val landing = new KeyProvider {
+      override def wrappingKeyB64(): String = {
+        if (fetches.incrementAndGet() == 1)
+          Files.write(Files.createDirectories(late).resolve("late.json"), "late".getBytes)
+        pubB64
+      }
+    }
+    val cfg = cfgFor(src, out, progress).copy(keyProvider = Some(landing))
+    val store = cfg.storeFactory.create()
+
+    val first = IngestJob.run(spark, cfg)
+    assert(first.days.map(_.day.toString) == Seq("2020-10-10", "2020-10-11", "2020-10-12"))
+    assert(first.filesOk == 15)
+    assert(store.listKeys("audit/2020-10-13/").isEmpty)
+    assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-12")))
+
+    val second = IngestJob.run(spark, cfg)
+    assert(second.days.map(_.day.toString) == Seq("2020-10-13"))
+    assert(store.listKeys("audit/2020-10-13/") == Seq("audit/2020-10-13/late.json.gz.enc"))
+    assert(Watermark.read(progress.toString).contains(LocalDate.parse("2020-10-13")))
   }
 
   test("run: a dirty middle day holds the watermark at the last clean day; re-run completes") {

@@ -30,6 +30,15 @@ class BinPackSpec extends AnyFunSuite {
     assert(AuditMicroBatchStream.binPack(Seq.empty, 100).isEmpty)
   }
 
+  test("binCap spreads the bytes over every core, caps at maxPartitionBytes, and is never 0") {
+    val mib = 1L << 20
+    assert(AuditMicroBatchStream.binCap(46 * mib + 1, 128 * mib, 4) == 46 * mib / 4 + 1)
+    assert(AuditMicroBatchStream.binCap(10 * 1024 * mib, 128 * mib, 4) == 128 * mib)
+    assert(AuditMicroBatchStream.binCap(0L, 128 * mib, 4) == 1L)
+    // all-empty input at the floor cap: the files share one bin
+    assert(AuditMicroBatchStream.binPack(Seq(f(1, 0), f(2, 0), f(3, 0)), 1L).length == 1)
+  }
+
   test("large n packs in O(n log b) time (1M files well under a second-scale budget)") {
     val rnd = new Random(11)
     val files = (0 until 1000000).map(i => f(i, rnd.nextInt(4 * 1024 * 1024).toLong))

@@ -509,6 +509,43 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     finally hin.close()
   }
 
+  test("a read stops at the first frame starting at its end, undecoded; a straddling frame is decoded whole") {
+    val root = Files.createTempDirectory("klog-until")
+    val frames = (0L until 4L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
+      Seq(KafkaLogFormat.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
+      (7L until 10L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
+      Seq(KafkaLogFormat.encodeGzipWrapperV1((10L until 13L).map(o => rec(o, s"gz-$o")))) ++
+      Seq(KafkaLogFormat.encode(rec(13L, "v1-13")))
+    // flip the last payload byte of the v1 frame at offset 7
+    val bytes = frames.reduce(_ ++ _)
+    val at = frames.take(6).map(_.length).sum - 1
+    bytes(at) = (bytes(at) ^ 0x01).toByte
+    val dir = root.resolve("t-0")
+    Files.createDirectories(dir)
+    val segFile = dir.resolve(KafkaLogFormat.segmentName(0))
+    Files.write(segFile, bytes)
+    val seg = new Path(segFile.toString)
+
+    def offsets(from: Long, until: Long): List[Long] = {
+      val in = fs.open(seg)
+      try KafkaLogFormat.readSegment(in, bytes.length, seg.toString, skipPayloadsOnly = false, from = from, until = until)
+        .map(_.offset).toList
+      finally in.close()
+    }
+    assert(offsets(0L, 7L) == (0L until 7L).toList, "the corrupt frame starts at 7: never decoded")
+    assert(intercept[IllegalArgumentException](offsets(0L, 8L)).getMessage.contains("CRC mismatch at offset 7"))
+    // the v2 batch 4..6 straddles 5, the gzip wrapper 10..12 straddles 11
+    assert(offsets(0L, 5L) == (0L until 7L).toList)
+    assert(offsets(10L, 11L) == List(10L, 11L, 12L))
+    val stream = cappedStream(root, 100)
+    assert(drainPlanned(stream, stream.plan(Map.empty, Map("t-0" -> 7L))).map(_._2) == (0L until 7L))
+    assert(drainPlanned(stream, stream.plan(Map("t-0" -> 10L), Map("t-0" -> 11L))).map(_._2) == Seq(10L))
+    val e = intercept[IllegalArgumentException] {
+      drainPlanned(stream, stream.plan(Map("t-0" -> 5L), Map("t-0" -> 8L)))
+    }
+    assert(e.getMessage.contains("CRC mismatch at offset 7"), e.getMessage)
+  }
+
   test("batch read form scans offset 0 to log end") {
     // more topic-partitions than cores: the batch scan packs them too
     val cores = spark.sparkContext.defaultParallelism
