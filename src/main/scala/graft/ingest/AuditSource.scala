@@ -27,6 +27,16 @@ object AuditSource {
     */
   val listDayCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** `srcDir` made absolute, with its scheme: the form a listing names
+    * files in. Day `d`'s dir is `<root>/<d>` ([[Watermark.parseDay]] takes
+    * only canonical names), the prefix both day front-ends strip from a
+    * file's path to form its object key.
+    */
+  def root(spark: SparkSession, srcDir: String): Path = {
+    val p = new Path(srcDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
   /** List dated child dirs, skipping non-dated names with a warning
     * (audit_data_ingest.py:30-32), sorted ascending so commit order is
     * chronological (the reference silently relies on `hdfs -ls` sort
@@ -54,8 +64,8 @@ object AuditSource {
   }
 
   /** Days strictly after the watermark (strict `>`, audit_data_ingest.py:33). */
-  def pendingDays(spark: SparkSession, srcDir: String, watermark: Option[LocalDate]): Seq[DayPartition] =
-    listDays(spark, srcDir).filter(d => Watermark.isPending(d.day, watermark))
+  def pendingDays(spark: SparkSession, srcDir: String, watermark: Option[LocalDate]): Seq[LocalDate] =
+    listDays(spark, srcDir).map(_.day).filter(Watermark.isPending(_, watermark))
 
   /** `days` in ONE `graft-audit` batch scan of `(path, content, day)`, so
     * one Spark job covers the whole backlog. [[IngestJob.run]] passes the
@@ -69,7 +79,7 @@ object AuditSource {
     * days) should be chunked by the caller into bounded runs, which the
     * day-ordered watermark makes safe.
     */
-  def readPending(spark: SparkSession, srcDir: String, days: Seq[DayPartition]): DataFrame = {
+  def readPending(spark: SparkSession, srcDir: String, days: Seq[LocalDate]): DataFrame = {
     require(days.nonEmpty, "readPending needs at least one day")
     spark.read
       .format("graft-audit")

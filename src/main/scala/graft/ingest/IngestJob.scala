@@ -127,11 +127,11 @@ object IngestJob {
     val days = AuditSource.pendingDays(spark, cfg.srcDir, watermark)
     log.info(s"Watermark=$watermark; ${days.size} pending day(s) in one job")
     if (days.isEmpty) return IngestSummary(Nil)
-    val keys = days.map(dp => dp.day.toString -> cfg.wrappingKeyB64()).toMap // per day, in day order (ref :78)
-    val dayDirs = days.map(dp => dp.day.toString -> new Path(dp.path).toUri.getPath).toMap
+    val keys = days.map(_.toString -> cfg.wrappingKeyB64()).toMap // per day, in day order (ref :78)
     val files = auditRows(AuditSource.readPending(spark, cfg.srcDir, days))
-    val uploaded = uploadFiles(files, cfg, keys, dayDirs).map(r => r.day -> r).toMap
-    val results = days.map(dp => uploaded.getOrElse(dp.day, DayResult(dp.day, 0L, 0L, Nil)))
+    val root = AuditSource.root(spark, cfg.srcDir).toUri.getPath
+    val uploaded = uploadFiles(files, cfg, keys, root).map(r => r.day -> r).toMap
+    val results = days.map(d => uploaded.getOrElse(d, DayResult(d, 0L, 0L, Nil)))
     results.foreach { r =>
       if (!r.ok) {
         throw new RuntimeException(
@@ -153,12 +153,12 @@ object IngestJob {
     scan.select(col("path"), col("content"), col("day").cast("string")).as[(String, Array[Byte], String)]
   }
 
-  /** Path of `filePath` relative to the (normalized) day directory; falls
-    * back to the basename if the prefix does not match (foreign URI form).
+  /** Path of `filePath` relative to the directory path `dir`; falls back to
+    * the basename if the prefix does not match (a Kafka record's name).
     */
-  private[ingest] def relativePath(dayDirNorm: String, filePath: String): String = {
+  private[ingest] def relativePath(dir: String, filePath: String): String = {
     val norm = new Path(filePath).toUri.getPath
-    if (norm.startsWith(dayDirNorm + "/")) norm.substring(dayDirNorm.length + 1)
+    if (norm.startsWith(dir + "/")) norm.substring(dir.length + 1)
     else norm.substring(norm.lastIndexOf('/') + 1)
   }
 
@@ -176,9 +176,10 @@ object IngestJob {
     * driver (one per day in [[run]], one per micro-batch in the streams) and
     * ship in the closure, so executors never reach the key provider.
     *
-    * @param keyB64For     maps a day string to its b64 wrapping key
-    * @param dayDirNormFor maps a day string to the normalized directory
-    *        prefix stripped from file paths when forming object keys
+    * @param keyB64For maps a day string to its b64 wrapping key
+    * @param rootPath  path of the source root ([[AuditSource.root]]): a
+    *        file's key keeps its path under `<rootPath>/<day>`, else its
+    *        basename
     * @return one result per day seen, oldest first: ok/failed counts summed
     *         over tasks and up to [[MaxFailureSamples]] failures
     */
@@ -186,7 +187,7 @@ object IngestJob {
       files: Dataset[(String, Array[Byte], String)],
       cfg: IngestConfig,
       keyB64For: String => String,
-      dayDirNormFor: String => String
+      rootPath: String
   ): Seq[DayResult] = {
     import files.sparkSession.implicits._
     val prefix = cfg.s3Prefix
@@ -202,7 +203,7 @@ object IngestJob {
       val acc = mutable.HashMap[String, DayTally]()
       it.foreach { case (path, content, dayStr) =>
         val day = acc.getOrElseUpdate(dayStr, new DayTally(Envelope.publicKeyFromBase64(keyB64For(dayStr))))
-        val key = s"$prefix$dayStr/${relativePath(dayDirNormFor(dayStr), path)}.gz.enc"
+        val key = s"$prefix$dayStr/${relativePath(s"$rootPath/$dayStr", path)}.gz.enc"
         try {
           val obj = Envelope.encrypt(Zlib.compress(content), day.key, keyId, mode)
           store.put(key, obj.ciphertext, obj.metadata)

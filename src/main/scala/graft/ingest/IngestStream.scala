@@ -20,9 +20,9 @@ final case class KafkaDrainSummary(batches: Long, records: Long, tombstones: Lon
   * compress→envelope-encrypt→put loop as the batch core
   * ([[IngestJob.uploadFiles]]); `Trigger.AvailableNow` drains the backlog
   * then terminates. The checkpointed offset log IS the watermark — a
-  * restart resumes from the last committed day — and each committed day is
-  * mirrored into the reference-format progress file so batch and stream
-  * stay interchangeable.
+  * restart resumes from the last committed day — and the source mirrors
+  * each committed day into the reference-format progress file so batch
+  * and stream stay interchangeable.
   *
   * Failure semantics match the reference's commit-or-abort day loop
   * (audit_data_ingest.py:50-68): any failed file in a day raises, the
@@ -42,26 +42,18 @@ object IngestStream {
       .load()
 
   /** Process one micro-batch (≈ one day): encrypt+upload every file, then
-    * commit-or-abort. Defensive about multi-day batches (possible only if
-    * a foreign ReadLimit coalesces days): files carry their own day, so
-    * keys stay correct regardless.
+    * commit-or-abort (the source mirrors the day once Spark commits it).
+    * Defensive about multi-day batches (possible only if a foreign
+    * ReadLimit coalesces days): files carry their own day, so keys stay
+    * correct regardless.
     */
   private[ingest] def processBatch(cfg: IngestConfig, batch: DataFrame, batchId: Long): Unit = {
-    val srcRootNorm = new org.apache.hadoop.fs.Path(cfg.srcDir).toUri.getPath
-    val files = IngestJob.auditRows(batch)
+    val root = AuditSource.root(batch.sparkSession, cfg.srcDir).toUri.getPath
     val pubB64 = cfg.wrappingKeyB64() // one fetch per micro-batch (ref :78)
-    val summary = IngestSummary(IngestJob.uploadFiles(files, cfg, _ => pubB64, dayStr => s"$srcRootNorm/$dayStr"))
+    val summary = IngestSummary(IngestJob.uploadFiles(IngestJob.auditRows(batch), cfg, _ => pubB64, root))
     if (summary.filesFailed > 0)
       throw new RuntimeException(s"Batch $batchId: ${summary.filesFailed} file(s) failed: ${summary.failureDetail}")
-    val maxDay = summary.days.lastOption.map(_.day)
-    // Mirror the completed day into the reference-format progress file
-    // HERE rather than only in the source's commit() callback: Spark
-    // delivers source.commit(end) while constructing the NEXT batch, so
-    // the final day of an AvailableNow drain would never reach the mirror.
-    // Writing it just before the offset commit keeps at-least-once (a
-    // crash in between re-runs the day; puts are idempotent by key).
-    maxDay.foreach(Watermark.commit(cfg.progressFile, _))
-    log.info(s"Batch $batchId committed: ${summary.filesOk} file(s), watermark mirror -> $maxDay")
+    log.info(s"Batch $batchId committed: ${summary.filesOk} file(s)")
   }
 
   /** Run one `Trigger.AvailableNow` drain of the backlog: every pending
@@ -75,10 +67,8 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((df: DataFrame, id: Long) => processBatch(cfg, df, id))
       .start()
-    try {
-      query.awaitTermination()
-      reconcileMirror(spark, cfg, checkpointDir)
-    } finally if (query.isActive) query.stop()
+    try query.awaitTermination()
+    finally if (query.isActive) query.stop()
   }
 
   /** The north-star pipeline as ONE call: Kafka-wire-format source →
@@ -154,7 +144,7 @@ object IngestStream {
       )
       .as[(String, Array[Byte], String)]
     val pubB64 = cfg.wrappingKeyB64() // one fetch per micro-batch (ref :78)
-    val summary = IngestSummary(IngestJob.uploadFiles(records, cfg, _ => pubB64, _ => ""))
+    val summary = IngestSummary(IngestJob.uploadFiles(records, cfg, _ => pubB64, ""))
     // The upload's job has filled the metric by the time it returns; an
     // upload that throws propagates past this line and never waits on it.
     val tombstones = obs.get("tombstones").asInstanceOf[Long]
@@ -164,48 +154,5 @@ object IngestStream {
       throw new RuntimeException(s"Kafka batch $batchId: ${summary.filesFailed} record(s) failed: ${summary.failureDetail}")
     log.info(s"Kafka batch $batchId committed: ${summary.filesOk} record(s)")
     (summary.filesOk, tombstones)
-  }
-
-  /** Align the reference-format progress file with the checkpoint's LAST
-    * COMMITTED end offset. The per-batch mirror in [[processBatch]] derives
-    * the day from observed rows, so a trailing day directory with ZERO
-    * files (a valid, admitted batch) never reaches it — leaving the mirror
-    * behind the checkpoint and making a later batch-mode run re-list that
-    * (empty) day. The committed end offset IS the admitted day, so after a
-    * drain we read it back from the checkpoint: `commits/<maxBatchId>`
-    * proves the batch completed; `offsets/<maxBatchId>`'s source line is
-    * the [[graft.sources]] day offset (`{"day":"YYYY-MM-DD"}`). Mirror
-    * only moves FORWARD — a replayed or stale checkpoint can never drag
-    * the watermark back.
-    */
-  private[ingest] def reconcileMirror(spark: SparkSession, cfg: IngestConfig, checkpointDir: String): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val commitsPath = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
-    val fs = commitsPath.getFileSystem(hc)
-    if (!fs.exists(commitsPath)) return
-    val lastBatch = fs
-      .listStatus(commitsPath)
-      .iterator
-      .map(_.getPath.getName)
-      .filter(_.forall(_.isDigit))
-      .map(_.toLong)
-      .foldLeft(-1L)(math.max)
-    if (lastBatch < 0) return
-    val offsetFile = new org.apache.hadoop.fs.Path(checkpointDir, s"offsets/$lastBatch")
-    val in = fs.open(offsetFile)
-    val content =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    // Offset-log layout: "v1" \n metadata json \n one offset json per source.
-    val dayLine = content.linesIterator.toSeq.drop(2).headOption
-    for {
-      line <- dayLine
-      m <- """"day"\s*:\s*"(\d{4}-\d{2}-\d{2})"""".r.findFirstMatchIn(line)
-      day = java.time.LocalDate.parse(m.group(1))
-      if Watermark.read(cfg.progressFile).forall(_.isBefore(day))
-    } {
-      Watermark.commit(cfg.progressFile, day)
-      log.info(s"Progress mirror reconciled to checkpoint end offset: $day")
-    }
   }
 }

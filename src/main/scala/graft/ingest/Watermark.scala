@@ -3,7 +3,7 @@ package graft.ingest
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDate
-import java.time.format.{DateTimeFormatter, DateTimeParseException}
+import java.time.format.DateTimeParseException
 
 /** Progress-file watermark: a single `YYYY-MM-DD` line recording the last
   * fully-completed day (audit_data_ingest.py:71-73,213-232).
@@ -13,9 +13,15 @@ import java.time.format.{DateTimeFormatter, DateTimeParseException}
   *  - malformed date => raise (:220-226)
   *  - the filter applied against it is STRICTLY greater-than (:33), so the
   *    recorded day itself is never reprocessed.
+  *
+  * One day codec: days are read only by `LocalDate.parse` (ISO_LOCAL_DATE,
+  * a STRICT resolver) and written only by `LocalDate.toString`, so a name
+  * is a day exactly when it is that day's canonical string. Like the
+  * reference's `strptime("%Y-%m-%d")` it rejects `2021-02-30`; unlike it,
+  * it also rejects one-digit fields (`2021-2-3` is skipped), since taking
+  * them would let two dir names map to one day again.
   */
 object Watermark {
-  private val Fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd")
 
   /** Read the watermark; None means "no progress yet, process all days". */
   def read(progressFile: String): Option[LocalDate] = {
@@ -23,7 +29,7 @@ object Watermark {
     if (!Files.exists(p)) None
     else {
       val raw = new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim
-      try Some(LocalDate.parse(raw, Fmt))
+      try Some(LocalDate.parse(raw))
       catch {
         case e: DateTimeParseException =>
           throw new IllegalStateException(s"Corrupt progress file $progressFile: '$raw'", e)
@@ -46,7 +52,7 @@ object Watermark {
     Files.createDirectories(parent)
     val tmp: Path = Files.createTempFile(parent, ".watermark", ".tmp")
     try {
-      Files.write(tmp, completedDay.format(Fmt).getBytes(StandardCharsets.UTF_8))
+      Files.write(tmp, completedDay.toString.getBytes(StandardCharsets.UTF_8))
       try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       catch {
         case _: java.nio.file.AtomicMoveNotSupportedException =>
@@ -59,7 +65,7 @@ object Watermark {
     * which the reference skips with a warning (audit_data_ingest.py:30-32).
     */
   def parseDay(name: String): Option[LocalDate] =
-    try Some(LocalDate.parse(name, Fmt))
+    try Some(LocalDate.parse(name))
     catch { case _: DateTimeParseException => None }
 
   /** The reference's `filter_date`: keep strictly newer days only (:33). */

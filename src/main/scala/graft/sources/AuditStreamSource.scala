@@ -18,7 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.slf4j.LoggerFactory
-import graft.ingest.{AuditSource, DayPartition, Watermark}
+import graft.ingest.{AuditSource, Watermark}
 
 /** DataSource V2 STREAMING source over the reference's dated-directory
   * audit drop (audit_data_ingest.py:129-150) — the pipeline's incremental
@@ -44,8 +44,8 @@ import graft.ingest.{AuditSource, DayPartition, Watermark}
   *  - **`Trigger.AvailableNow`**: [[SupportsTriggerAvailableNow]] pins the
   *    ceiling day at query start, so one invocation drains the backlog and
   *    terminates — the reference's scheduled-run shape.
-  *  - An optional `progressFile` option mirrors each committed day into
-  *    the reference-format watermark file ([[SparkDataStream.commit]]),
+  *  - An optional `progressFile` is the initial watermark, and each
+  *    committed day is mirrored into it ([[AuditMicroBatchStream.latestOffset]]),
   *    keeping the batch core and the stream interchangeable.
   *
   * The batch form, `spark.read.format("graft-audit")`, reads every day
@@ -58,11 +58,10 @@ import graft.ingest.{AuditSource, DayPartition, Watermark}
   * (path, length) for the days being planned; content bytes are read by
   * executors straight from the source filesystem. A day is listed by a
   * recursive `listStatus` walk. Files are bin-packed into input partitions
-  * of at most `min(maxPartitionBytes, ceil(bytes / defaultParallelism))`
-  * ([[AuditMicroBatchStream.binCap]]; `maxPartitionBytes` defaults to
-  * 128 MiB), so parallelism scales with bytes, not file count, and a small
-  * batch still spreads over every core. Zero-length files are read like
-  * any other.
+  * of at most `min(128 MiB, ceil(bytes / defaultParallelism))`
+  * ([[AuditMicroBatchStream.binCap]]), so parallelism scales with bytes,
+  * not file count, and a small batch still spreads over every core.
+  * Zero-length files are read like any other.
   */
 class AuditStreamSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-audit"
@@ -87,21 +86,13 @@ object AuditStreamSourceProvider {
   /** Batch-scan option naming the exact days to read. */
   val DaysOption = "days"
 
-  /** The [[DaysOption]] value for `days`: one `day dir` line each. The dir
-    * is passed as listed, since a day's name cannot be rebuilt from its
-    * date ([[Watermark.parseDay]] reads `2021-02-30` as 2021-02-28).
+  /** The [[DaysOption]] value for `days`: their names, comma-separated. A
+    * day's dir is `<root>/<day>` ([[AuditSource.root]]).
     */
-  def daysOption(days: Seq[DayPartition]): String =
-    days.map { dp =>
-      require(!dp.path.contains('\n'), s"day dir name holds a line break: ${dp.path}")
-      s"${dp.day} ${dp.path}"
-    }.mkString("\n")
+  def daysOption(days: Seq[LocalDate]): String = days.mkString(",")
 
-  private[sources] def parseDays(value: String): Seq[DayPartition] =
-    value.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-      val sp = line.indexOf(' ')
-      DayPartition(LocalDate.parse(line.substring(0, sp)), line.substring(sp + 1))
-    }
+  private[sources] def parseDays(value: String): Seq[LocalDate] =
+    value.split(',').toSeq.filter(_.nonEmpty).map(LocalDate.parse)
 }
 
 private[sources] class AuditStreamTable(options: CaseInsensitiveStringMap)
@@ -190,8 +181,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
 
   private val progressFile = Option(options.get("progressfile")).filter(_.nonEmpty)
   private val startDay = Option(options.get("startday")).filter(_.nonEmpty).map(LocalDate.parse)
-  private val maxPartitionBytes =
-    Option(options.get("maxpartitionbytes")).map(_.toLong).getOrElse(128L * 1024 * 1024)
+  private lazy val root = AuditSource.root(spark, srcDir)
 
   /** Ceiling pinned by Trigger.AvailableNow at query start: the newest day
     * listed then; later-arriving days wait for the next run, exactly like
@@ -230,9 +220,22 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
   /** Admit exactly ONE day per micro-batch: the oldest pending day after
     * `start`, bounded by the AvailableNow ceiling. Returning `start`
     * unchanged signals "no new data".
+    *
+    * The one writer of the `progressFile` mirror, too: `start` is written
+    * to it when ahead of it (forward only: a mirror a batch run moved past
+    * stays). Spark passes as `start` the end of the last committed batch
+    * (on a fresh checkpoint, the initial offset: the mirror or `startDay`)
+    * on every trigger, the one ending an AvailableNow drain included, so a
+    * trailing day with no files is mirrored too. Crash window: between a
+    * batch's commit and the next trigger the mirror lags the commit log by
+    * one day (a rerun with nothing pending restores it); it is never ahead
+    * of it or of `startDay`. This assumes async progress tracking is off,
+    * under which Spark may plan a batch before the last commit is durable.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val wm = start.asInstanceOf[AuditDayOffset].day
+    for (pf <- progressFile; day <- wm if Watermark.read(pf).forall(_.isBefore(day)))
+      Watermark.commit(pf, day)
     val listed = AuditSource.listDays(spark, srcDir)
     lastListedDay = Some(listed.lastOption.map(_.day))
     val all = listed.filter(d => Watermark.isPending(d.day, wm))
@@ -261,9 +264,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val startWm = start.asInstanceOf[AuditDayOffset].day
     val endDay = end.asInstanceOf[AuditDayOffset].day.getOrElse(return Array.empty)
-    val days = AuditSource
-      .pendingDays(spark, srcDir, startWm)
-      .filter(d => !d.day.isAfter(endDay))
+    val days = AuditSource.pendingDays(spark, srcDir, startWm).filter(!_.isAfter(endDay))
     planDays(days, s"(${startWm.getOrElse("-")}, $endDay]")
   }
 
@@ -275,20 +276,19 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
     planDays(AuditSource.pendingDays(spark, srcDir, wm), s"(${wm.getOrElse("-")}, *]")
   }
 
-  /** Every file under each of `days`, nested ones included, tagged with
-    * the day it was listed under, bin-packed to the [[AuditMicroBatchStream.binCap]].
+  /** Every file under each of `days`' dirs, nested ones included, tagged
+    * with its day, bin-packed to the [[AuditMicroBatchStream.binCap]].
     */
-  private[sources] def planDays(days: Seq[DayPartition], range: String): Array[InputPartition] = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val files = days.flatMap { dp =>
-      val p = new Path(dp.path)
-      val epochDay = dp.day.toEpochDay.toInt
+  private[sources] def planDays(days: Seq[LocalDate], range: String): Array[InputPartition] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = days.flatMap { day =>
+      val epochDay = day.toEpochDay.toInt
       AuditMicroBatchStream
-        .filesUnder(p.getFileSystem(hadoopConf), p)
+        .filesUnder(fs, new Path(root, day.toString))
         .map(st => (st.getPath.toString, st.getLen, epochDay))
     }
     val cap = AuditMicroBatchStream.binCap(
-      files.iterator.map(_._2).sum, maxPartitionBytes, spark.sparkContext.defaultParallelism)
+      files.iterator.map(_._2).sum, AuditMicroBatchStream.MaxPartitionBytes, spark.sparkContext.defaultParallelism)
     val bins = AuditMicroBatchStream.binPack(files, cap)
     log.info(s"Batch $range: ${files.size} file(s) in ${bins.length} partition(s) of at most $cap bytes")
     bins.map(b => AuditFilesPartition(b): InputPartition)
@@ -296,15 +296,8 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
 
   override def createReaderFactory(): PartitionReaderFactory = AuditPartitionReaderFactory(hadoopConf)
 
-  /** Batch committed (offsets durably in the checkpoint log): mirror the
-    * day into the reference-format progress file so batch and streaming
-    * runs stay interchangeable (audit_data_ingest.py:71-73).
-    */
-  override def commit(end: Offset): Unit =
-    for {
-      pf <- progressFile
-      day <- end.asInstanceOf[AuditDayOffset].day
-    } Watermark.commit(pf, day)
+  /** Nothing to discard; [[latestOffset]] writes the mirror. */
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
@@ -318,6 +311,9 @@ private[sources] object AuditMicroBatchStream {
     */
   private def filesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.flatMap(st => if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
+
+  /** The largest bin [[binCap]] allows, Spark's `maxPartitionBytes` default. */
+  val MaxPartitionBytes: Long = 128L << 20
 
   /** Largest bin for `totalBytes` over `cores`: `maxPartitionBytes`, or
     * less so that the bytes spread over every core (Spark's own

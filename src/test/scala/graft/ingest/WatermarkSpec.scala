@@ -56,6 +56,16 @@ class WatermarkSpec extends AnyFunSuite {
     assert(Watermark.parseDay("2020-13-45").isEmpty)
   }
 
+  test("one day codec: only a day's canonical name parses; an impossible day in the file is corrupt") {
+    for (name <- Seq("2021-02-30", "2021-02-29", "2021-2-3", "02021-02-28"))
+      assert(Watermark.parseDay(name).isEmpty, name)
+    assert(Watermark.parseDay("2020-02-29").contains(LocalDate.parse("2020-02-29")))
+    val f = tmpFile()
+    Files.write(Paths.get(f), "2021-02-30".getBytes)
+    val e = intercept[IllegalStateException](Watermark.read(f))
+    assert(e.getMessage.startsWith("Corrupt progress file"))
+  }
+
   test("isPending is STRICTLY greater-than (ref :33)") {
     val w = Some(LocalDate.parse("2020-10-10"))
     assert(!Watermark.isPending(LocalDate.parse("2020-10-09"), w))

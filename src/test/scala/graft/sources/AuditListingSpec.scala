@@ -49,6 +49,6 @@ class AuditListingSpec extends AnyFunSuite {
       }.toMap
     val want = Map("a.txt" -> (1, "2021-05-05"), "empty.txt" -> (0, "2021-05-05"), "sub/b.txt" -> (2, "2021-05-05"))
     assert(lengths(spark.read.format("graft-audit").option("srcDir", root).load()) == want)
-    assert(lengths(AuditSource.readPending(spark, root, AuditSource.listDays(spark, root))) == want)
+    assert(lengths(AuditSource.readPending(spark, root, AuditSource.listDays(spark, root).map(_.day))) == want)
   }
 }
