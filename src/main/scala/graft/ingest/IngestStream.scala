@@ -1,7 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.slf4j.LoggerFactory
 
 /** Totals of one [[IngestStream.runKafkaAvailableNow]] run: micro-batches
@@ -29,6 +29,25 @@ final case class KafkaDrainSummary(batches: Long, records: Long, tombstones: Lon
   * micro-batch aborts, its offset is never committed, and the next run
   * re-processes the whole day (at-least-once, fresh key+nonce per
   * attempt).
+  *
+  * Checkpoint logs: both streams write their offset log (before a batch)
+  * and commit log (after it) through [[CheckpointFiles]], which on the
+  * local FS writes and publishes each log file with java.nio instead of
+  * Hadoop calls that fork `chmod` and `readlink` per file. The manager is
+  * scoped to these two queries: [[startWithCheckpointFiles]] sets
+  * `spark.sql.streaming.checkpointFileManagerClass` on the caller's session
+  * around `start()` only and restores it in a `finally`. `start()` builds
+  * the query's own clone of the session, and Spark builds the query's logs
+  * from that clone's Hadoop conf, so the setting reaches this query's logs
+  * and no other query's. A stream that another thread starts on the same
+  * session inside that window gets the same manager, which changes nothing
+  * off the local FS and only the fork count on it.
+  *
+  * Each checkpoint has one writer: one query runs per checkpoint at a
+  * time, as the reference runs one pipeline instance (`max_in_flight: 1`).
+  * The manager does not rely on it for its no-overwrite publish (link(2)
+  * refuses an existing log file even to a second writer); the single
+  * writer is what makes deleting a stale checksum before a publish safe.
   */
 object IngestStream {
   private val log = LoggerFactory.getLogger(getClass)
@@ -40,6 +59,20 @@ object IngestStream {
       .option("srcDir", cfg.srcDir)
       .option("progressFile", cfg.progressFile)
       .load()
+
+  /** Spark's setting that names a query's checkpoint file manager class. */
+  private[ingest] val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start `writer` on `spark` with [[CheckpointFiles]] as the query's
+    * checkpoint manager, then put the session's setting back as it was
+    * (unset if it was), also when `start()` throws.
+    */
+  private[ingest] def startWithCheckpointFiles(spark: SparkSession, writer: DataStreamWriter[Row]): StreamingQuery = {
+    val prior = spark.conf.getOption(CheckpointManagerConf)
+    spark.conf.set(CheckpointManagerConf, classOf[CheckpointFiles].getName)
+    try writer.start()
+    finally prior.fold(spark.conf.unset(CheckpointManagerConf))(spark.conf.set(CheckpointManagerConf, _))
+  }
 
   /** Process one micro-batch (≈ one day): encrypt+upload every file, then
     * commit-or-abort (the source mirrors the day once Spark commits it).
@@ -62,11 +95,10 @@ object IngestStream {
     * good day).
     */
   def runAvailableNow(spark: SparkSession, cfg: IngestConfig, checkpointDir: String): Unit = {
-    val query = source(spark, cfg).writeStream
+    val query = startWithCheckpointFiles(spark, source(spark, cfg).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(cfg, df, id))
-      .start()
+      .foreachBatch((df: DataFrame, id: Long) => processBatch(cfg, df, id)))
     try query.awaitTermination()
     finally if (query.isActive) query.stop()
   }
@@ -100,7 +132,7 @@ object IngestStream {
       .fold(reader)(n => reader.option("maxRecordsPerTrigger", n.toString))
       .load()
     val batches, records, tombstones = new java.util.concurrent.atomic.AtomicLong()
-    val query = src.writeStream
+    val query = startWithCheckpointFiles(spark, src.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: DataFrame, id: Long) =>
@@ -109,8 +141,7 @@ object IngestStream {
         records.addAndGet(ok)
         tombstones.addAndGet(dead)
         ()
-      }
-      .start()
+      })
     try query.awaitTermination()
     finally if (query.isActive) query.stop()
     KafkaDrainSummary(batches.get, records.get, tombstones.get)

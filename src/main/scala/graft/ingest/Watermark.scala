@@ -1,7 +1,7 @@
 package graft.ingest
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 import java.time.format.DateTimeParseException
 
@@ -37,29 +37,18 @@ object Watermark {
     }
   }
 
-  /** Overwrite the watermark with the completed day: temp file + rename
-    * (ATOMIC_MOVE where the file system has it), so a PROCESS crash
-    * mid-commit leaves either the old date or the new one, never a
-    * half-written date (stronger than the reference's plain overwrite,
-    * same observable semantics). Nothing is fsynced: after a power loss or
-    * OS crash the commit may be lost (the day re-runs, at-least-once) or
-    * the file may be left empty, which [[read]] rejects as corrupt. A
-    * failed write or move deletes the temp file and rethrows.
+  /** Overwrite the watermark with the completed day through
+    * [[Publish.file]]: temp file + rename (ATOMIC_MOVE where the file
+    * system has it), so a PROCESS crash mid-commit leaves either the old
+    * date or the new one, never a half-written date (stronger than the
+    * reference's plain overwrite, same observable semantics). Nothing is
+    * fsynced: after a power loss or OS crash the commit may be lost (the
+    * day re-runs, at-least-once) or the file may be left empty, which
+    * [[read]] rejects as corrupt. A failed write or move deletes the temp
+    * file and rethrows.
     */
-  def commit(progressFile: String, completedDay: LocalDate): Unit = {
-    val target = Paths.get(progressFile).toAbsolutePath
-    val parent = Option(target.getParent).getOrElse(Paths.get("."))
-    Files.createDirectories(parent)
-    val tmp: Path = Files.createTempFile(parent, ".watermark", ".tmp")
-    try {
-      Files.write(tmp, completedDay.toString.getBytes(StandardCharsets.UTF_8))
-      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      catch {
-        case _: java.nio.file.AtomicMoveNotSupportedException =>
-          Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-      }
-    } finally Files.deleteIfExists(tmp) // a no-op once the move has happened
-  }
+  def commit(progressFile: String, completedDay: LocalDate): Unit =
+    Publish.file(Paths.get(progressFile), completedDay.toString.getBytes(StandardCharsets.UTF_8))
 
   /** Parse a `YYYY-MM-DD` day-directory name; None for non-dated dirs,
     * which the reference skips with a warning (audit_data_ingest.py:30-32).
