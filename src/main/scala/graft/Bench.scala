@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Benchmark entry: runs every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR`, emits ONE compact JSON line with per-query
@@ -78,96 +78,31 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Pin the session TZ like Verify/IngestCli/SparkSpec: the NTZ→LTZ cast
-      // in Tables.t is only an identity reinterpretation under UTC.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.ops.Tables.NanosConf, "true")) // events table is TIMESTAMP(NANOS)
-      .getOrCreate()
+    val sfDir = Harness.sfDir
+    val cpus = SessionTuning.cpus
+    // Dev loop: SPARK_GRAFT_ONLY=x06,s03 times just those queries.
+    val ordered = Harness.selected
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Per-rep STAGE-LEVEL instrumentation (the x06 bimodality forensics:
-    // a slow rep's diff vs a fast rep's tells GC stall from straggler
-    // task from extra-stage replan without reproducing under a profiler):
-    // task-time sum, GC-time sum, task count, worst single task, stage
-    // count — captured by a listener scoped to the timed window, written
-    // per rep to bench_full.json, never to stdout.
-    class RepMetrics extends org.apache.spark.scheduler.SparkListener {
-      val runMs = new java.util.concurrent.atomic.AtomicLong()
-      val gcMs = new java.util.concurrent.atomic.AtomicLong()
-      val tasks = new java.util.concurrent.atomic.AtomicLong()
-      val maxTaskMs = new java.util.concurrent.atomic.AtomicLong()
-      val stages = new java.util.concurrent.atomic.AtomicLong()
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          runMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          tasks.incrementAndGet()
-          maxTaskMs.getAndUpdate(x => math.max(x, m.executorRunTime))
-        }
-      }
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-      def json: String =
-        s"""{"run_ms":${runMs.get},"gc_ms":${gcMs.get},"tasks":${tasks.get},""" +
-          s""""max_task_ms":${maxTaskMs.get},"stages":${stages.get}}"""
-    }
-
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean, String) = {
-      spark.catalog.clearCache()
-      // Drop leftover localCheckpoint blocks too: clearCache only clears
-      // catalog-cached TABLES, while most queries checkpoint intermediate
-      // frames whose blocks otherwise accumulate in the block manager for
-      // the REST OF THE RUN (ContextCleaner reaps them only after a driver
-      // GC notices the orphaned RDD). Measured effect: late-alphabet
-      // queries (p04, x06 — x06 runs dead last) timed against 260+
-      // queries' garbage crept monotonically as the suite grew
-      // (x06 0.52→1.73 s over r12–r16) while their ISOLATED minimums sat
-      // at or below their references (x06 0.662 s vs ref 0.816) — suite
-      // position, not code, was the regression.
-      //
-      // INVARIANT this sweep imposes: no query may rely on a cached or
-      // localCheckpointed frame SHARED ACROSS timeOnce calls (e.g. an
-      // object-level lazy val holding a checkpointed fixture). Check-
-      // pointed blocks are unrecomputable — unpersisting one here would
-      // make a later query that still references it fail mid-suite with
-      // a missing-block error, far from this line. Every query today
-      // builds its frames inside its own invocation; keep it that way,
-      // or scope any future shared fixture OUTSIDE the block manager
-      // (re-read parquet, don't checkpoint-and-share).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      val rm = new RepMetrics
-      spark.sparkContext.addSparkListener(rm)
-      val t0 = System.nanoTime()
-      val ok =
+    // Per-rep job ledger (the x06 bimodality forensics: a slow rep's diff
+    // vs a fast rep's tells GC stall from straggler task from extra-stage
+    // replan without reproducing under a profiler), scoped to the timed
+    // window, written per rep to bench_full.json, never to stdout.
+    def timeOnce(fn: Harness.Query): (Double, Boolean, String) = {
+      Harness.sweep(spark)
+      val (ok, sec, ledger) = Harness.window(spark) {
         try { fn(spark, sfDir).count(); true }
         catch {
           case e: Throwable =>
             System.err.println(s"BENCH FAIL: ${e.getClass.getName}: ${e.getMessage}")
             false
         }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // the drain sleep sits OUTSIDE the timed window (listener events
-      // are async; ~ms-scale lag, 30 ms covers it for forensics-grade
-      // rather than accounting-grade numbers)
-      Thread.sleep(30)
-      spark.sparkContext.removeSparkListener(rm)
-      (sec, ok, rm.json)
+      }
+      (sec, ok, ledger.json)
     }
 
     val reference = loadReference(sfDir)
-    // Dev loop: SPARK_GRAFT_ONLY=x06,s03 times just those queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .sortBy(_._1)
     val warmOk = ordered.map { case (name, fn) => name -> timeOnce(fn)._2 }.toMap
     val passes: Seq[Map[String, (Double, Boolean, String)]] = (1 to Reps).map { _ =>
       ordered.map { case (name, fn) =>
@@ -229,7 +164,7 @@ object Bench {
     val total = results.filterNot(_._2.isNaN).map(_._2).sum
 
     // Full artifact → file (complete name→min map + raw reps + per-rep
-    // stage/GC forensics aligned with the reps arrays).
+    // job ledger aligned with the reps arrays).
     val qsFull = results.map { case (k, v, _, _, _, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val reps = results
       .map { case (k, _, ts, _, _, _) => "\"" + k + "\":" + ts.map(fmt).mkString("[", ",", "]") }
@@ -239,10 +174,7 @@ object Bench {
       .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsFull,"reps":$reps,"rep_metrics":$repMetrics,"failed":$failed,"contended":$contended,"sf":"$sfDir","cpus":$cpus}"""
-    scala.util.Try {
-      val w = new java.io.PrintWriter("bench_full.json", "UTF-8")
-      try w.println(fullJson) finally w.close()
-    }
+    scala.util.Try(Files.writeString(Paths.get("bench_full.json"), fullJson + "\n"))
 
     // Compact stdout line (the only stdout JSON): slowest-TopN map + full
     // alphabetical int-ms array. Budget ≈1.5 KB so the 2 KB capture window
@@ -258,10 +190,7 @@ object Bench {
     // round comparison was lost to a stdout-capture parse failure
     // (BENCH_r17 `parsed: null` despite a complete run) — a parser that
     // misses the line in the log can recover it here verbatim.
-    scala.util.Try {
-      val w = new java.io.PrintWriter("bench_line.json", "UTF-8")
-      try w.println(stdoutLine) finally w.close()
-    }
+    scala.util.Try(Files.writeString(Paths.get("bench_line.json"), stdoutLine + "\n"))
     println(stdoutLine)
     spark.stop()
     // Forked JVM: hard-exit after the artifacts are out (see Verify).

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{Envelope, IngestConfig, IngestStream, LocalDirObjectStoreFactory}
@@ -29,14 +28,8 @@ import graft.sources.KafkaLogFormat
 object KafkaStreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nParts = sys.env.getOrElse("SPARK_GRAFT_KAFKA_PARTS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

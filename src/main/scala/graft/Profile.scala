@@ -1,99 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
 
 /** Per-JOB forensics for one query (dev tool, guide §1: measure first).
   *
-  * `SPARK_GRAFT_ONLY=s39 sbt "runMain graft.Profile"` runs each named
+  * `SPARK_GRAFT_ONLY=s39 sbt "runMain graft.Profile"` runs each selected
   * query once warm + once profiled and prints every Spark job the
   * profiled rep submitted: duration, stage count, task count, and the
-  * call site / description — the data that says whether a 5-second
-  * composite is heavy COMPUTE or forty sequential 100 ms jobs. Stdout
-  * only, no artifacts; Bench remains the timing source of record.
+  * call site / description, then each of its stages with time, tasks and
+  * input / shuffle-read / shuffle-write bytes — the data that says
+  * whether a 5-second composite is heavy COMPUTE or forty sequential
+  * 100 ms jobs. Stdout only, no artifacts; Bench remains the timing
+  * source of record.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.ops.Tables.NanosConf, "true"))
-      .getOrCreate()
+    val sfDir = Harness.sfDir
+    val targets = Harness.selected
+    val spark = SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    class JobLog extends SparkListener {
-      case class J(id: Int, t0: Long, desc: String, var stages: Int = 0, var tasks: Int = 0)
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-      val done = new java.util.concurrent.ConcurrentLinkedQueue[(J, Long)]()
-      val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      case class S(name: String, ms: Long, tasks: Int, shufR: Long, shufW: Long, in: Long)
-      val stagesDone = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, S)]()
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // the LAST stage of the job is the action's call site (e.g.
-        // "parquet at IvfIndex.scala:199") — the attribution that tells
-        // which operator step submitted this job
-        val desc = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?")
-        val j = J(e.jobId, e.time, desc, e.stageIds.size)
-        jobs.put(e.jobId, j)
-        e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        // containsKey first: on a missing stage, get()'s null would unbox
-        // to 0 and silently attribute the task to job 0
-        if (stageToJob.containsKey(e.stageId)) {
-          val j = jobs.get(stageToJob.get(e.stageId))
-          if (j != null) j.tasks += 1
-        }
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        val ms = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
-        stagesDone.add((stageToJob.getOrDefault(si.stageId, -1), si.stageId,
-          S(si.name, ms, si.numTasks,
-            if (m != null) m.shuffleReadMetrics.totalBytesRead else 0L,
-            if (m != null) m.shuffleWriteMetrics.bytesWritten else 0L,
-            if (m != null) m.inputMetrics.bytesRead else 0L)))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId)
-        if (j != null) done.add((j, e.time - j.t0))
-      }
-    }
-
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val targets = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.isEmpty || only.exists(n.startsWith) }
-      .sortBy(_._1)
     targets.foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.sweep(spark)
       fn(spark, sfDir).count() // warm rep: JIT + page cache
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      val log = new JobLog
-      spark.sparkContext.addSparkListener(log)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(100)
-      spark.sparkContext.removeSparkListener(log)
-      import scala.jdk.CollectionConverters._
-      val rows = log.done.asScala.toSeq.sortBy(_._1.id)
-      println(f"== $name: $sec%.3f s, ${rows.size} jobs, " +
-        f"${rows.map(_._2).sum} ms in jobs, ${rows.map(_._1.stages).sum} stages ==")
-      val stagesByJob = log.stagesDone.asScala.toSeq.groupBy(_._1)
-      rows.foreach { case (j, ms) =>
-        println(f"  job ${j.id}%4d ${ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
-        if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES"))
-          stagesByJob.getOrElse(j.id, Nil).sortBy(_._2).foreach { case (_, sid, s) =>
-            println(f"      stage $sid%4d ${s.ms}%6d ms tasks=${s.tasks}%4d in=${s.in}%9d sr=${s.shufR}%9d sw=${s.shufW}%9d  ${s.name.take(90)}")
-          }
+      Harness.sweep(spark)
+      val (_, sec, ledger) = Harness.window(spark)(fn(spark, sfDir).count())
+      val jobs = ledger.jobs
+      println(f"== $name: $sec%.3f s, ${jobs.size} jobs, " +
+        f"${jobs.map(_.ms).sum} ms in jobs, ${jobs.map(_.stages).sum} stages ==")
+      val stagesByJob = ledger.stages.groupBy(_.job)
+      jobs.foreach { j =>
+        println(f"  job ${j.id}%4d ${j.ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
+        stagesByJob.getOrElse(j.id, Nil).foreach { s =>
+          println(f"      stage ${s.id}%4d ${s.ms}%6d ms tasks=${s.tasks}%4d in=${s.inputBytes}%9d " +
+            f"sr=${s.shuffleReadBytes}%9d sw=${s.shuffleWriteBytes}%9d  ${s.name.take(90)}")
+        }
       }
     }
     spark.stop()

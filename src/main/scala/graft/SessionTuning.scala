@@ -28,8 +28,32 @@ import org.apache.spark.sql.SparkSession
   *
   * `SPARK_GRAFT_ADVISORY_MB` overrides the target size (production
   * clusters with fast NICs may prefer 128–256 MB, guide §9).
+  *
+  * Every session in the repo comes from [[local]]: Bench, Verify, Profile,
+  * PlanDump, the `Scale*` and stream benches, `IngestCli` (with its own
+  * deployment master) and the test suite's `SparkSpec` (plus a temp
+  * warehouse dir), so the CLI and the tests run the config Bench measures.
+  * perfbench, whose code is frozen between benchmark changes, sets the same
+  * confs itself around [[tuned]] and adds its own directory paths.
   */
 object SessionTuning {
+  /** Cores for a local run: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The session builder for `cores` local cores: [[tuned]], shuffle
+    * partitions = cores, UI off, UTC (the NTZ→LTZ cast in `Tables.t` is an
+    * identity reinterpretation only under UTC), and nanosecond parquet
+    * timestamps read as longs (the events table is TIMESTAMP(NANOS)).
+    * The master is `local[cores]`; a caller may override it.
+    */
+  def local(cores: Int = cpus): SparkSession.Builder =
+    tuned(SparkSession.builder())
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(graft.ops.Tables.NanosConf, "true")
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     val advisoryMb = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "64")
     b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,21 +14,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.ops.Tables.NanosConf, "true")) // events table is TIMESTAMP(NANOS)
-      .getOrCreate()
+    // Same opt-in subset knob as Bench: SPARK_GRAFT_ONLY=x01,x03 dumps just
+    // the queries with those name prefixes (the driver never sets it, so
+    // the gate always runs all).
+    val targets = Harness.selected
+    val spark = SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Same opt-in subset knob as Bench: SPARK_GRAFT_ONLY=x01,x03 dumps just
-    // those queries (the driver never sets it, so the gate always runs all).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }.foreach { case (name, fn) =>
+    targets.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         // Oracle-checked outputs must be scalar-only: the driver's checker

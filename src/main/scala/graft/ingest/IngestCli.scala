@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.slf4j.LoggerFactory
 
 /** CLI entry point — the reference's argparse `__main__` block
@@ -47,7 +46,9 @@ object IngestCli {
       |                             the checkpointed offset map is the watermark and keys are
       |                             {prefix}{day}/{topic}-{partition}-{offset}.gz.enc
       |  --aes-mode <gcm|eax>       payload cipher: gcm (hardened default) or eax (reference parity)
-      |  --retries <n>              store-put attempts AND Spark task retries (default 3)
+      |  --retries <n>              store-put attempts AND Spark task attempts (default 3):
+      |                             the default master is local[*,<n>]; a SPARK_MASTER
+      |                             cluster master gets spark.task.maxFailures=<n>
       |
       |Without --streaming, every pending day is ingested in one Spark job (one key fetch
       |per day) and the watermark is committed day by day, oldest first, up to the first
@@ -168,6 +169,13 @@ object IngestCli {
       .take(10)
       .exists(_.isInstanceOf[TransientCredentialsException])
 
+  /** `SPARK_MASTER` when set (a cluster master reads `spark.task.maxFailures`),
+    * else every local core with `retries` task attempts: local mode ignores
+    * `spark.task.maxFailures` unless the master string carries it (`local[N,F]`).
+    */
+  private[ingest] def master(env: String => Option[String], retries: Int): String =
+    env("SPARK_MASTER").getOrElse(s"local[*,$retries]")
+
   /** Python-logging level names (the reference's LOGLEVEL vocabulary) to
     * Spark/log4j levels. CRITICAL→FATAL and WARNING→WARN are the two
     * renames; NOTSET has no analog and maps to the most verbose.
@@ -189,12 +197,11 @@ object IngestCli {
         System.err.println(usage)
         sys.exit(2)
       case Right(ParsedArgs(cfg, retries, streamingCkpt, kafkaRoot)) =>
-        val spark = SparkSession
-          .builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+        val spark = graft.SessionTuning
+          .local(Runtime.getRuntime.availableProcessors)
+          .master(master(sys.env.get, retries))
           .appName("graft-ingest")
           .config("spark.task.maxFailures", retries.toString)
-          .config("spark.sql.session.timeZone", "UTC")
           .getOrCreate()
         // The reference configures verbosity from the LOGLEVEL env var
         // (audit_data_ingest.py:22); same contract here, mapped onto the

@@ -272,7 +272,7 @@ object RetrievalOps {
     // in a doc contributes 0 to that doc's approximate score (PLAID's
     // semantics; the old form took max over ALL the doc's cells instead —
     // recall at the operating point is re-measured, not assumed:
-    // PlaidProbe at the gate SFs, ScalePlaid at 10x/30x).
+    // r17's calibration sweep at the gate SFs, ScalePlaid at 10x/30x).
     val centMap: Map[Int, Array[Float]] = cents.toMap
     val probeEntries: Map[Int, Seq[(Long, Long, Double)]] = qvecs
       .flatMap { case (qd, qt, v) =>
@@ -1396,11 +1396,11 @@ object RetrievalOps {
     // survivors' full token vectors under a broadcast semi-join and
     // scores them with the EXACT kernel (identical arithmetic to r15,
     // so candidate scores are exact by construction). Operating point
-    // from an honest (kCells x nCand) sweep (PlaidProbe): 64 token
+    // from an honest (kCells x nCand) sweep (r17 calibration): 64 token
     // cells, top-40 candidates — recall@10 measured 9/10 for every
     // query doc at both gate SFs (the centroid interaction is a
-    // coarse surrogate on isotropic tokens; the sweep is in-source so
-    // the trade-off is inspectable). Soundness summary per query doc
+    // coarse surrogate on isotropic tokens; PlaidSpec pins the recall
+    // floor at both gate SFs). Soundness summary per query doc
     // (the s02/s04 discipline — the candidate set depends on k-means
     // state no SQL engine reproduces): returned scores match the
     // engine's own unpruned exact kernel elementwise (0 mismatches),

@@ -1347,7 +1347,8 @@ object SimilarityOps {
     // Phase 'post_retrain' serves from the retrained geometry, where
     // the wave owns real cells of its own. Ground truth both phases =
     // originals ∪ surviving wave; exact scores ⇒ zero mismatches.
-    // Floors (nprobe=6, honest sweep in DriftProbe/RetrainSpec): pre 3
+    // Floors (nprobe=6, honest sweep in s44's calibration run and
+    // RetrainSpec): pre 3
     // — measured 8/10 at sf0.001 but 4/10 at sf0.01, the
     // stale-geometry ceiling the fixture is built to show; post 5 —
     // measured 9/10 and 6/10, >= pre at every swept nprobe at both

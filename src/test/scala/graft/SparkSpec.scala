@@ -2,16 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test JVM. */
+/** One shared local SparkSession for the whole test JVM: the session
+  * factory's config at 4 cores, plus a temp warehouse dir.
+  */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = SessionTuning
+    .local(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(graft.ops.Tables.NanosConf, "true") // events table is TIMESTAMP(NANOS)
     .config(
       "spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString

@@ -133,4 +133,11 @@ class IngestCliSpec extends AnyFunSuite {
     assert(IngestCli.logLevelFor("NOTSET").contains("TRACE"))
     assert(IngestCli.logLevelFor("VERBOSE").isEmpty) // unknown -> warn + ignore
   }
+
+  test("master: local mode carries --retries as its task-attempt count; SPARK_MASTER wins") {
+    // local[*] alone gives one attempt per task whatever spark.task.maxFailures says
+    assert(IngestCli.master(_ => None, 3) == "local[*,3]")
+    assert(IngestCli.master(_ => None, 1) == "local[*,1]")
+    assert(IngestCli.master(Map("SPARK_MASTER" -> "yarn").get, 5) == "yarn")
+  }
 }
