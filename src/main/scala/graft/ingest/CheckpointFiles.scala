@@ -79,7 +79,7 @@ class CheckpointFiles(path: Path, hadoopConf: Configuration)
       try Publish.move(tmp, target, overwriteIfPossible)
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
-          throw new FileAlreadyExistsException(s"Checkpoint file $dst exists; not overwriting it with $src")
+          throw new FileAlreadyExistsException(s"$dst exists; not overwriting it with $src")
             .initCause(e)
       } finally Files.deleteIfExists(tmp) // a no-op once published
     } else super.renameTempFile(src, dst, overwriteIfPossible)

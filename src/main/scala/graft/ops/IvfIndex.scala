@@ -1156,14 +1156,8 @@ object IvfIndex {
 
   private[ops] def publishLiveState(spark: SparkSession, indexDir: String, st: LiveState): Unit = {
     val dest = new org.apache.hadoop.fs.Path(s"$indexDir/$LiveStateFile")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/$LiveStateFile.tmp")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(s"${st.gen} ${st.consumedThrough}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"could not publish $dest")
+    graft.ingest.Publish.file(dest.getFileSystem(spark.sparkContext.hadoopConfiguration), dest,
+      s"${st.gen} ${st.consumedThrough}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Fold the live view into a fresh base generation: current base +

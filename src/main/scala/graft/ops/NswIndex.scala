@@ -327,9 +327,7 @@ object NswIndex {
     val fs = markerPath.getFileSystem(emb.sparkSession.sparkContext.hadoopConfiguration)
     metaCol match {
       case Some(c) =>
-        val out = fs.create(markerPath, true)
-        try out.write(c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        graft.ingest.Publish.file(fs, markerPath, c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       case None =>
         if (fs.exists(markerPath)) fs.delete(markerPath, false)
     }
@@ -949,27 +947,17 @@ object NswIndex {
     }
     // ONE job per batch: the row count rides the write as an observed
     // metric (the IndexStreams.upsertBatch discipline) instead of the
-    // former localCheckpoint + count + write triple. Stage-then-publish:
-    // the write lands in an `_`-prefixed staging dir (invisible to
-    // readers) and one rename publishes it only when n > 0, so a crash
-    // can never expose a rowless batch dir (schema inference would break
-    // for every channel reader — absence is the representation).
+    // former localCheckpoint + count + write triple. The write lands in
+    // an `_`-prefixed staging dir (invisible to readers), published by
+    // [[graft.ingest.Publish.stagedDir]].
     val obs = org.apache.spark.sql.Observation()
-    val dir = s"$indexDir/pending/batch=$batchId"
-    val staging = s"$indexDir/pending/_staging_batch=$batchId"
+    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/pending/_staging_batch=$batchId")
     assigned.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(staging)
+      .write.mode("overwrite").partitionBy("cluster").parquet(staging.toString)
     val n = obs.get("n").asInstanceOf[Long]
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (n == 0) {
-      if (fs.exists(sp)) fs.delete(sp, true)
-    } else {
-      val fp = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(fp)) fs.delete(fp, true) // replayed epoch: overwrite
-      require(fs.rename(sp, fp), s"failed to publish $staging -> $dir")
-    }
+    graft.ingest.Publish.stagedDir(staging.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      staging, new org.apache.hadoop.fs.Path(s"$indexDir/pending/batch=$batchId"), n)
     n
   }
 

@@ -397,7 +397,11 @@ object KafkaLogFormat {
 
   /** Write pre-encoded frames (v1 messages, wrappers, or v2 batches — a
     * real post-upgrade segment mixes them) as one segment file named by
-    * `baseOffset`. Returns the segment path.
+    * `baseOffset`, published whole by [[graft.ingest.Publish.file]]. An
+    * existing segment is never replaced: that throws Hadoop's
+    * `FileAlreadyExistsException`. The file has no `.crc` sidecar; every
+    * frame carries its own CRC, which the reader checks. Returns the
+    * segment path.
     */
   def writeSegmentFrames(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -407,9 +411,7 @@ object KafkaLogFormat {
   ): Path = {
     require(frames.nonEmpty, "empty segment")
     val seg = new Path(dir, segmentName(baseOffset))
-    val out = fs.create(seg, /* overwrite = */ false)
-    try frames.foreach(out.write)
-    finally out.close()
+    graft.ingest.Publish.file(fs, seg, Array.concat(frames: _*), overwrite = false)
     seg
   }
 

@@ -67,27 +67,6 @@ object ObjectStoreSinkProvider {
   * zero-egress CI — see its scaladoc).
   */
 private[graft] object StoreOptions {
-  /** Inverse of [[factoryFrom]]: DSv2 options that reconstruct `factory`
-    * on the executors — lets callers holding the ingest seam target ANY
-    * store kind through the same `format("graft-objects")` write, instead
-    * of casting to a local dir.
-    */
-  def optionsFor(factory: ObjectStoreFactory): Map[String, String] = factory match {
-    case LocalDirObjectStoreFactory(root) => Map("root" -> root)
-    case s3: graft.ingest.S3ObjectStoreFactory =>
-      Map(
-        "s3.bucket" -> s3.bucket,
-        "s3.endpoint" -> s3.endpoint,
-        "s3.region" -> s3.region,
-        "s3.accesskey" -> s3.accessKey,
-        "s3.secretkey" -> s3.secretKey
-      ) ++ s3.sessionToken.map("s3.sessiontoken" -> _)
-    case other =>
-      throw new IllegalArgumentException(
-        s"no graft-objects option mapping for store factory ${other.getClass.getName}"
-      )
-  }
-
   def factoryFrom(get: String => String): ObjectStoreFactory = {
     def opt(k: String): Option[String] = Option(get(k)).filter(_.nonEmpty)
     opt("s3.bucket") match {

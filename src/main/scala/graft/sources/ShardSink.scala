@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions.{col, count, from_json, lit, max, min, str
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.ingest.Publish
 
 /** `graft-shards`: a batch DSv2 sink that lands a corpus as the standard
   * training-data container — newline-delimited JSON in gzip shards
@@ -423,9 +424,7 @@ private[sources] object ShardManifest {
 
   def bumpGeneration(fs: FileSystem, dir: HPath): Long = {
     val next = readGeneration(fs, dir) + 1
-    val p = new HPath(dir, GenerationFileName)
-    val out = fs.create(p, true)
-    try out.write(next.toString.getBytes(UTF_8)) finally out.close()
+    Publish.file(fs, new HPath(dir, GenerationFileName), next.toString.getBytes(UTF_8))
     next
   }
 
@@ -481,27 +480,14 @@ private[sources] object ShardManifest {
   }
 
   def archiveCurrent(fs: FileSystem, dir: HPath, gen: Long): Unit = {
-    val shards = readIfExists(fs, dir)
-    val tmp = new HPath(dir, archiveName(gen) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(render(shards).getBytes(UTF_8)) finally out.close()
-    val dest = new HPath(dir, archiveName(gen))
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"could not archive $dest")
+    Publish.file(fs, new HPath(dir, archiveName(gen)), render(readIfExists(fs, dir)).getBytes(UTF_8))
     // snapshot the schema chain's current head beside the manifest so
     // readAsOf serves the superseded layout under the columns its own
     // consumers saw (written AFTER the manifest archive: a crash
     // between the two leaves a readable generation that falls back to
     // the live chain — degraded, never wrong-files)
     ShardSchemas.readLatest(fs, dir).foreach { case (_, st) =>
-      val stmp = new HPath(dir, schemaAsOfName(gen) + ".tmp")
-      val sout = fs.create(stmp, true)
-      try sout.write(st.json.getBytes(UTF_8)) finally sout.close()
-      val sdest = new HPath(dir, schemaAsOfName(gen))
-      if (fs.exists(sdest)) fs.delete(sdest, false)
-      if (!fs.rename(stmp, sdest))
-        throw new IllegalStateException(s"could not archive $sdest")
+      Publish.file(fs, new HPath(dir, schemaAsOfName(gen)), st.json.getBytes(UTF_8))
     }
   }
 
@@ -514,17 +500,8 @@ private[sources] object ShardManifest {
   def readArchive(fs: FileSystem, dir: HPath, name: String): Seq[ShardInfo] =
     readFile(fs, new HPath(dir, name))
 
-  def writeAtomic(fs: FileSystem, dir: HPath, shards: Seq[ShardInfo]): Unit = {
-    fs.mkdirs(dir)
-    val tmp = new HPath(dir, FileName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(render(shards).getBytes(UTF_8))
-    finally out.close()
-    val dest = new HPath(dir, FileName)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"could not publish $dest")
-  }
+  def writeAtomic(fs: FileSystem, dir: HPath, shards: Seq[ShardInfo]): Unit =
+    Publish.file(fs, new HPath(dir, FileName), render(shards).getBytes(UTF_8))
 }
 
 /** Per-generation SCHEMA RECORDS for a shard directory — the schema
@@ -533,7 +510,7 @@ private[sources] object ShardManifest {
   * thing that must be governed is the READ schema and the
   * compatibility of what writers claim. Each evolution writes
   * `_SCHEMA.g<n>.json` (zero-padded, lexicographic = generation
-  * order, atomic tmp+rename); the LATEST record is by construction
+  * order, published by `Publish.file`); the LATEST record is by construction
   * the union of everything ever appended, so [[TrainingShards.read]]
   * uses it as the read schema — older rows null-fill columns added
   * after them, and inference never silently narrows a mixed corpus.
@@ -558,16 +535,8 @@ private[sources] object ShardSchemas {
       (gen, DataType.fromJson(new String(buf, UTF_8)).asInstanceOf[StructType])
     }
 
-  def write(fs: FileSystem, dir: HPath, gen: Long, schema: StructType): Unit = {
-    fs.mkdirs(dir)
-    val tmp = new HPath(dir, name(gen) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-    val dest = new HPath(dir, name(gen))
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(s"could not publish $dest")
-  }
+  def write(fs: FileSystem, dir: HPath, gen: Long, schema: StructType): Unit =
+    Publish.file(fs, new HPath(dir, name(gen)), schema.json.getBytes(UTF_8))
 
   def clear(fs: FileSystem, dir: HPath): Unit =
     list(fs, dir).foreach(n => fs.delete(new HPath(dir, n), false))

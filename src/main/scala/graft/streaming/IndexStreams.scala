@@ -71,36 +71,19 @@ object IndexStreams {
       .observe(obs, count(lit(1)).as("n"), avg(col("cos_sim")).as("drift"))
     // Stage-then-publish: land in an underscore-prefixed staging dir
     // (Hadoop's hidden-path filter makes `_…` invisible to every reader),
-    // then ONE rename publishes it only when the batch has rows. An EMPTY
-    // batch (a delete-only epoch through the churn stream) deletes its
-    // staging dir instead: a rowless batch=<id> dir would carry no
-    // partition columns and break schema inference for every later
-    // reader of stream_assignment/ — absence is the representation. A
-    // crash never leaves a rowless dir visible (the earlier
-    // write-then-delete shape had exactly that window). A REPLAYED epoch
-    // deletes its prior dir before the rename, so between the two
-    // neither generation is visible, and a crash there leaves the epoch
-    // absent until the replay re-publishes it; a failed rename raises.
-    // Replay overwrites the staging dir, as idempotent as before. Still
-    // ONE Spark job.
-    val dir = s"$indexDir/stream_assignment/batch=$batchId"
-    val staging = s"$indexDir/stream_assignment/_staging_batch=$batchId"
+    // then publish it with [[graft.ingest.Publish.stagedDir]]: an EMPTY
+    // batch (a delete-only epoch through the churn stream) publishes
+    // nothing. Replay overwrites the staging dir. Still ONE Spark job.
+    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/stream_assignment/_staging_batch=$batchId")
     assigned
       .drop("cos_sim")
       .write.mode("overwrite")
       .partitionBy("cluster")
-      .parquet(staging)
+      .parquet(staging.toString)
     val row = obs.get
     val n = row("n").asInstanceOf[Long]
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    val fs = sp.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (n == 0) {
-      if (fs.exists(sp)) fs.delete(sp, true)
-    } else {
-      val fp = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(fp)) fs.delete(fp, true) // replayed epoch: overwrite
-      require(fs.rename(sp, fp), s"failed to publish $staging -> $dir")
-    }
+    graft.ingest.Publish.stagedDir(staging.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration),
+      staging, new org.apache.hadoop.fs.Path(s"$indexDir/stream_assignment/batch=$batchId"), n)
     (n, row.get("drift").flatMap(Option(_)).map(_.asInstanceOf[Double]).getOrElse(Double.NaN))
   }
 

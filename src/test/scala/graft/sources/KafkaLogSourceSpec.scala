@@ -43,19 +43,31 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     assert(new String(got.head.value) == "alpha" && new String(got.head.key) == "k0")
     assert(got(1).key == null && got(2).value == null)
 
-    // flip one payload byte -> loud CRC failure with context
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(seg.toUri.getPath))
+    // flip one payload byte of the segment on disk -> loud CRC failure
+    // with context (the segment has no .crc sidecar: the frame CRC is
+    // the check)
+    val onDisk = java.nio.file.Paths.get(seg.toUri.getPath)
+    assert(!Files.exists(onDisk.resolveSibling(s".${onDisk.getFileName}.crc")))
+    val bytes = Files.readAllBytes(onDisk)
     bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0x01).toByte
-    val corrupt = dir.resolve("corrupt-0")
-    java.nio.file.Files.createDirectories(corrupt)
-    java.nio.file.Files.write(corrupt.resolve(KafkaLogFormat.segmentName(0)), bytes)
-    val cp = new Path(corrupt.resolve(KafkaLogFormat.segmentName(0)).toString)
-    val cin = fs.open(cp)
+    Files.write(onDisk, bytes)
+    val cin = fs.open(seg)
     val e = intercept[IllegalArgumentException] {
-      KafkaLogFormat.readSegment(cin, bytes.length, cp.toString, skipPayloadsOnly = false).toList
+      KafkaLogFormat.readSegment(cin, bytes.length, seg.toString, skipPayloadsOnly = false).toList
     }
     cin.close()
     assert(e.getMessage.contains("CRC mismatch"))
+  }
+
+  test("a second segment at the same base offset is refused and the first file keeps its bytes") {
+    val dir = new Path(Files.createTempDirectory("kwire-dup").resolve("t-0").toString) // made by the write
+    val seg = KafkaLogFormat.writeSegment(fs, dir, Seq(rec(0, "first")))
+    val first = Files.readAllBytes(java.nio.file.Paths.get(seg.toUri.getPath))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      KafkaLogFormat.writeSegment(fs, dir, Seq(rec(0, "second")))
+    }
+    assert(Files.readAllBytes(java.nio.file.Paths.get(seg.toUri.getPath)).sameElements(first))
+    assert(fs.listStatus(dir).map(_.getPath.getName).toSeq == Seq(KafkaLogFormat.segmentName(0)))
   }
 
   test("v2 record batch round-trips; CRC-32C catches a flipped byte in the records area") {

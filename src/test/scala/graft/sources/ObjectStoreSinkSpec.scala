@@ -109,16 +109,19 @@ class ObjectStoreSinkSpec extends AnyFunSuite {
     assert(decrypted(store, keys(1), priv) == "x" * 5000)
   }
 
-  test("DSv2 writer targets an S3 store through the factory seam (StoreOptions.optionsFor)") {
+  test("DSv2 writer targets an S3 store through its s3.* options") {
     val (pub, priv) = Envelope.generateKeyPair()
     val fake = new FakeS3Server("bkt", pageSize = 1000)
     try {
-      val factory = S3ObjectStoreFactory(fake.endpoint, "eu-west-2", "bkt", "AKIDEXAMPLE", "sk")
+      val s3Opts = Map(
+        "s3.bucket" -> "bkt", "s3.endpoint" -> fake.endpoint, "s3.region" -> "eu-west-2",
+        "s3.accesskey" -> "AKIDEXAMPLE", "s3.secretkey" -> "sk"
+      )
       val payloads = (1 to 5).map(i => s"audit-data-$i.json" -> s"""{"id": "000$i"}""")
       encryptedRows(Base64.getEncoder.encodeToString(pub.getEncoded), payloads)
-        .write.format("graft-objects").options(StoreOptions.optionsFor(factory)).mode("append").save()
+        .write.format("graft-objects").options(s3Opts).mode("append").save()
 
-      val store = factory.create()
+      val store = S3ObjectStoreFactory(fake.endpoint, "eu-west-2", "bkt", "AKIDEXAMPLE", "sk").create()
       assert(store.listKeys("pfx/2024-02-02/").size == 5)
       assert(decrypted(store, "pfx/2024-02-02/audit-data-1.json.gz.enc", priv) == """{"id": "0001"}""")
     } finally fake.stop()

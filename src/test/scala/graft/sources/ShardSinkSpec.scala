@@ -193,13 +193,43 @@ class ShardSinkSpec extends AnyFunSuite {
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     TrainingShards.write(half1, out, maxDocsPerShard = 64)
+    // a dir whose manifest carries a .crc, as Hadoop's checksummed local
+    // FS writes it: the append's publish must not leave that checksum
+    // stale for the checksummed reads below
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val manifestPath = new org.apache.hadoop.fs.Path(out, "_MANIFEST.json")
+    val first = Files.readAllBytes(Paths.get(out, "_MANIFEST.json"))
+    val rewrite = local.create(manifestPath, true)
+    try rewrite.write(first) finally rewrite.close()
+    assert(Files.exists(Paths.get(out, "._MANIFEST.json.crc")))
     TrainingShards.write(half2, out, maxDocsPerShard = 64)
+    val in = local.open(manifestPath)
+    try assert(in.readAllBytes().sameElements(Files.readAllBytes(Paths.get(out, "_MANIFEST.json"))))
+    finally in.close()
     val manifest = new String(Files.readAllBytes(Paths.get(out, "_MANIFEST.json")), "UTF-8")
     val totalDocs = """"total_docs": (\d+)""".r.findFirstMatchIn(manifest).map(_.group(1).toLong)
     assert(totalDocs.contains(docs.count()), s"append undercounted: $totalDocs")
     val back = TrainingShards.read(spark, out, Some(docs.schema))
     assert(back.count() == docs.count())
     assert(docs.except(back.select(docs.columns.map(col): _*)).count() == 0)
+  }
+
+  test("a failed manifest publish throws; the next append still serves every earlier shard") {
+    graft.FaultFs.bind(spark.sparkContext.hadoopConfiguration)
+    val local = Files.createTempDirectory("graft-shards-fault")
+    val out = graft.FaultFs.uri(local)
+    val docs = graft.ops.Tables.t(spark, dir, "documents").select("doc_id", "text")
+    def ids(from: Int, until: Int) = docs.filter(col("doc_id") >= from && col("doc_id") < until)
+    TrainingShards.write(ids(0, 10), out)
+    val e = intercept[Exception] {
+      graft.FaultFs.failingRenamesTo(local.resolve("_MANIFEST.json"))(TrainingShards.write(ids(10, 20), out))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("_MANIFEST.json")), e.toString)
+    TrainingShards.write(ids(20, 30), out)
+    val served = TrainingShards.read(spark, out, Some(docs.schema)).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(served == ((0L until 10L) ++ (20L until 30L)), s"served $served")
   }
 
   test("overwrite truncates: stale shards removed, manifest holds only the new write") {

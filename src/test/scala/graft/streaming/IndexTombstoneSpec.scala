@@ -33,10 +33,11 @@ class IndexTombstoneSpec extends AnyFunSuite {
   /** Base = vec_id >= 100; batches 0/1 stream in 0..99; batch 2 deletes
     * 1,2,3 (streamed) + 105 (base); batch 3 re-upserts 1.
     */
-  private def churnedIndex(): (org.apache.spark.sql.DataFrame, String, Array[Float]) = {
+  private def churnedIndex(
+      idxDir: String = Files.createTempDirectory("graft-ivf-tomb-spec").toString
+  ): (org.apache.spark.sql.DataFrame, String, Array[Float]) = {
     import spark.implicits._
     val emb = Tables.t(spark, sfDir, "embeddings")
-    val idxDir = Files.createTempDirectory("graft-ivf-tomb-spec").toString
     IvfIndex.build(emb.filter(col("vec_id") >= 100), idxDir, k = 16, iters = 2)
     val cents = IvfIndex.loadCentroids(spark, idxDir)
     IndexStreams.upsertBatch(emb.filter(col("vec_id") < 50), 0L, idxDir, cents)
@@ -176,9 +177,17 @@ class IndexTombstoneSpec extends AnyFunSuite {
     val (emb, idxDir, qe) = churnedIndex()
     val before = IvfIndex.searchIndexLive(spark, idxDir, qe, k = 10, nprobe = 6,
       excludeId = Some(0L)).collect().map(_.toString).toSeq
+    // a marker with a .crc, as Hadoop's checksummed local FS writes it:
+    // the compaction's publish must not leave that checksum stale for
+    // readLiveState, which reads through the same FS
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val marker = local.create(new org.apache.hadoop.fs.Path(idxDir, "_LIVE_STATE"), true)
+    try marker.write("0 -1".getBytes) finally marker.close()
+    assert(Files.exists(java.nio.file.Paths.get(idxDir, "._LIVE_STATE.crc")))
     assert(IvfIndex.readLiveState(spark, idxDir) == IvfIndex.LiveState(0L, -1L))
     val st1 = IvfIndex.compactLiveIndex(spark, idxDir)
     assert(st1 == IvfIndex.LiveState(1L, 3L), s"unexpected post-compact state $st1")
+    assert(IvfIndex.readLiveState(spark, idxDir) == st1)
     val gen1 = spark.read.parquet(IvfIndex.liveBaseDir(idxDir, 1L))
     assert(gen1.count() == gen1.select("vec_id").distinct().count(),
       "compacted generation holds duplicate ids")
@@ -189,6 +198,21 @@ class IndexTombstoneSpec extends AnyFunSuite {
     assert(before == after, s"compaction changed search results\nbefore: $before\nafter:  $after")
     // nothing pending => compaction is a no-op returning the same state
     assert(IvfIndex.compactLiveIndex(spark, idxDir) == st1)
+  }
+
+  test("a compaction whose _LIVE_STATE publish fails throws; the marker still names the prior generation") {
+    graft.FaultFs.bind(spark.sparkContext.hadoopConfiguration)
+    val local = Files.createTempDirectory("graft-ivf-fault-spec")
+    val (_, idxDir, _) = churnedIndex(graft.FaultFs.uri(local))
+    val st1 = IvfIndex.compactLiveIndex(spark, idxDir)
+    assert(st1 == IvfIndex.LiveState(1L, 3L))
+    IndexStreams.tombstoneBatch(spark, Seq(4L), 4L, idxDir)
+    val e = intercept[Exception] {
+      graft.FaultFs.failingRenamesTo(local.resolve("_LIVE_STATE"))(IvfIndex.compactLiveIndex(spark, idxDir))
+    }
+    assert(e.getMessage.contains("_LIVE_STATE"), e.getMessage)
+    assert(IvfIndex.readLiveState(spark, idxDir) == st1)
+    assert(IvfIndex.compactLiveIndex(spark, idxDir) == IvfIndex.LiveState(2L, 4L), "the retry publishes")
   }
 
   test("vacuum retention: retain=2 keeps the previous generation; retain=1 reclaims " +
