@@ -67,21 +67,6 @@ final class AhoCorasick private (
     }
     false
   }
-
-  /** End positions (exclusive) of every match of every pattern, for
-    * span-level consumers (redaction, snippet extraction).
-    */
-  def findMatches(text: String): Seq[(Int, Int)] = { // (patternId, endPos)
-    val hits = Seq.newBuilder[(Int, Int)]
-    var state = 0
-    var i = 0
-    while (i < text.length) {
-      state = step(state, text.charAt(i))
-      outputs(state).foreach(p => hits += ((p, i + 1)))
-      i += 1
-    }
-    hits.result()
-  }
 }
 
 object AhoCorasick {

@@ -156,18 +156,4 @@ object MisraGries {
   def candidates(c: Column, k: Int): Column =
     ColumnBridge.column(
       MisraGriesItems(ColumnBridge.expression(c), k).toAggregateExpression())
-
-  /** The same MG update step over a plain String-keyed map — the form a
-    * streaming state store holds (DocumentStreams.streamingHeavyHitters
-    * carries one such ≤k-entry map per key across micro-batches, so the
-    * n/(k+1) bound covers the stream's FULL history, not one batch).
-    */
-  def updateMap(m: mutable.HashMap[String, Long], item: String, k: Int): Unit =
-    m.get(item) match {
-      case Some(c) => m.update(item, c + 1)
-      case None if m.size < k => m.update(item, 1L)
-      case None =>
-        m.mapValuesInPlace((_, c) => c - 1)
-        m.filterInPlace((_, c) => c > 0L)
-    }
 }

@@ -31,7 +31,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCh
   *  - `mkdirs` and `createCheckpointDirectory` (once per query start) are
   *    `Files.createDirectories`.
   *  Reads, listings, `exists` and `delete` stay Spark's, as does every
-  *  method on any other file system (HDFS keeps its native rename). A
+  *  method on any other file system (HDFS keeps its native rename), except
+  *  that there too a failed `renameTempFile` deletes its temp file before
+  *  it rethrows: Spark's `RenameBasedFSDataOutputStream` marks itself
+  *  closed before the rename throws, so its `cancel()` deletes nothing. A
   *  checkpoint on a file system with no `FileContext` binding fails at
   *  construction, where Spark's default factory would fall back to its
   *  `FileSystem`-based manager.
@@ -82,7 +85,13 @@ class CheckpointFiles(path: Path, hadoopConf: Configuration)
           throw new FileAlreadyExistsException(s"$dst exists; not overwriting it with $src")
             .initCause(e)
       } finally Files.deleteIfExists(tmp) // a no-op once published
-    } else super.renameTempFile(src, dst, overwriteIfPossible)
+    } else
+      try super.renameTempFile(src, dst, overwriteIfPossible)
+      catch {
+        case e: Throwable =>
+          try delete(src) catch { case d: Exception => e.addSuppressed(d) }
+          throw e
+      }
 
   override def mkdirs(p: Path): Unit =
     if (local) Files.createDirectories(nio(p)) else super.mkdirs(p)

@@ -18,11 +18,6 @@ trait KeyProvider {
   def wrappingKeyB64(): String
 }
 
-/** Static key from config — the zero-egress default. */
-final case class StaticKeyProvider(b64: String) extends KeyProvider {
-  override def wrappingKeyB64(): String = b64
-}
-
 /** Parameter-store-backed provider against the public SSM REST surface
   * (`GetParameter` with `WithDecryption` over the x-amz-json-1.1
   * protocol, SigV4-signed) — the production fill for the seam the

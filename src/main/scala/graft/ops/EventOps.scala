@@ -4,11 +4,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Tables.{t, Q}
 
-/** Event-time operators over the `events` table — the batch-SQL forms of
-  * the streaming surface (tumbling windows, sessionization, stateful
-  * dedup). The same transforms run under Structured Streaming in
-  * [[graft.streaming.EventStreams]]; here they are expressed over a bounded
-  * DataFrame so the DuckDB oracle can check them (SURVEY.md §2.3).
+/** Event-time operators over the `events` table (tumbling windows,
+  * sessionization, dedup), expressed over a bounded DataFrame so the
+  * DuckDB oracle can check them (SURVEY.md §2.3).
   */
 object EventOps {
 
@@ -347,11 +345,9 @@ object EventOps {
     }),
 
     // Interval (range) join: each purchase matched to the same user's
-    // clicks in the preceding hour — the batch twin of the watermarked
-    // stream-stream join ([[graft.streaming.EventStreams.clickAttribution]]).
-    // Equi-key on user_id carries the shuffle; the time bounds ride as a
-    // post-join predicate, so this is a plain hash/sort-merge join at
-    // scale, never a nested-loop.
+    // clicks in the preceding hour. Equi-key on user_id carries the
+    // shuffle; the time bounds ride as a post-join predicate, so this is
+    // a plain hash/sort-merge join at scale, never a nested-loop.
     "q47_interval_join" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val clicks = ev

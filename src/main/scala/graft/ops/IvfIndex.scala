@@ -927,30 +927,6 @@ object IvfIndex {
   final case class AdaptiveProbe(result: DataFrame, probed: Seq[Int],
     stoppedByBound: Boolean, trace: Seq[(Int, Double, Double)] = Nil)
 
-  /** Adaptive top-k over a STATIC index (no unconsumed churn — the
-    * [[searchIndex]] precondition, enforced the same way). Opt-in: the
-    * fixed-nprobe path stays the default; this is the escape hatch for
-    * recall-critical serving where per-query probe depth must follow
-    * the data. Requires the radii sidecar ([[saveCellRadii]]).
-    */
-  def searchIndexAdaptive(
-      spark: SparkSession,
-      indexDir: String,
-      queryVec: Array[Float],
-      k: Int,
-      minProbe: Int,
-      probeStep: Int,
-      probeCap: Int,
-      excludeId: Option[Long] = None,
-      momentAware: Boolean = false): AdaptiveProbe = {
-    val st = readLiveState(spark, indexDir)
-    require(pendingBatchIds(spark, indexDir, st).isEmpty,
-      s"$indexDir has unconsumed stream/tombstone batches — use searchIndexLiveAdaptive " +
-        "(merge-on-read) or compact first")
-    searchAdaptiveCore(spark, indexDir, st, queryVec, k, minProbe, probeStep, probeCap,
-      excludeId, momentAware)
-  }
-
   /** Adaptive top-k over a LIVE index. The churn channel is BOUNDED
     * (by the compaction policy), so it is served WHOLE, upfront, as its
     * own arm: unconsumed upserts LWW-resolved and tombstone-filtered,
@@ -962,8 +938,9 @@ object IvfIndex {
     * strict recall improvement on the churn tail). Base chunks then
     * exclude every id with channel activity (broadcast anti-join — the
     * shadowed/deleted base versions must not serve), and the
-    * base-generation radii bound the base-only remainder exactly as in
-    * the static walk.
+    * base-generation radii bound the base-only remainder. With empty
+    * channels the walk reads base cells only. Requires the radii
+    * sidecar ([[saveCellRadii]]).
     */
   def searchIndexLiveAdaptive(
       spark: SparkSession,
@@ -976,21 +953,6 @@ object IvfIndex {
       excludeId: Option[Long] = None,
       momentAware: Boolean = false): AdaptiveProbe = {
     val st = readLiveState(spark, indexDir)
-    searchAdaptiveCore(spark, indexDir, st, queryVec, k, minProbe, probeStep, probeCap,
-      excludeId, momentAware)
-  }
-
-  private def searchAdaptiveCore(
-      spark: SparkSession,
-      indexDir: String,
-      st: LiveState,
-      queryVec: Array[Float],
-      k: Int,
-      minProbe: Int,
-      probeStep: Int,
-      probeCap: Int,
-      excludeId: Option[Long],
-      momentAware: Boolean = false): AdaptiveProbe = {
     require(minProbe >= 1 && probeStep >= 1 && probeCap >= minProbe,
       s"bad adaptive probe schedule: minProbe=$minProbe step=$probeStep cap=$probeCap")
     val cents = loadCentroidsAt(spark, indexDir, st)

@@ -36,15 +36,6 @@ object MultimodalOps {
 
   case class FrameSample(asset_id: Long, frame_idx: Int, frame_hash: Long)
 
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false)
-  ))
-
   /** THE CODEC SEAM. Implement with a real decoder (JavaCV, TwelveMonkeys,
     * ffmpeg-over-a-pipe) and inject it into [[extractFeatures]]/
     * [[sampleFrames]]/[[resize]] — the distributed plumbing (schema,

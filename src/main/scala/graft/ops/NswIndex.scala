@@ -989,21 +989,6 @@ object NswIndex {
   private def consumedThrough(spark: SparkSession, indexDir: String): Long =
     IvfIndex.readLiveState(spark, indexDir).consumedThrough
 
-  /** Reclaim superseded cell generations, keeping the serving one plus
-    * `retain` predecessors for in-flight readers. Returns deleted paths.
-    */
-  def vacuumCells(spark: SparkSession, indexDir: String, retain: Int = 1): Seq[String] = {
-    val st = IvfIndex.readLiveState(spark, indexDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    (0L until math.max(0L, st.gen - retain)).flatMap { g =>
-      Seq(cellsDir(indexDir, g), IvfIndex.geomDir(indexDir, "centroids", g)).flatMap { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) { fs.delete(p, true); Some(d) } else None
-      }
-    }
-  }
-
   /** Does `dir` exist with at least one `batch=` partition? (Vacuumed
     * channels can leave an empty parent behind; reading it would fail
     * schema inference.)
@@ -1014,21 +999,6 @@ object NswIndex {
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("batch="))
   }
 
-  /** Serve the LIVE view: the graph walk over the built cells plus one
-    * partition-pruned EXACT scan of the pending tail, merged under the
-    * usual total order. Deletes and inserts compose last-writer-wins
-    * by epoch ([[IvfIndex.searchIndexLive]]'s merge): base rows (epoch
-    * −1) die to any tombstone, a pending row dies to a tombstone
-    * at-or-after its epoch, a re-insert after a delete resurfaces. An
-    * id with any pending row is served from the PENDING side (the
-    * newer write shadows the graph's copy — an updated embedding must
-    * not be answered from the stale node), so the walk's keep-
-    * predicate drops tombstoned AND pending ids. Both side-input id
-    * sets are the churn since the last rebuild — bounded by serving
-    * policy and CollectGuard-capped, loud when the policy is violated.
-    * Scores on both arms are exact rounded cosines, so the soundness
-    * contract (zero mismatches) holds end to end.
-    */
   /** id -> latest tombstone epoch over the channel — the LWW side
     * input both live searches share (bounded by rebuild policy,
     * CollectGuard-capped, loud when the policy is violated).
@@ -1098,6 +1068,21 @@ object NswIndex {
       .limit(k)
   }
 
+  /** Serve the LIVE view: the graph walk over the built cells plus one
+    * partition-pruned EXACT scan of the pending tail, merged under the
+    * usual total order. Deletes and inserts compose last-writer-wins
+    * by epoch ([[IvfIndex.searchIndexLive]]'s merge): base rows (epoch
+    * −1) die to any tombstone, a pending row dies to a tombstone
+    * at-or-after its epoch, a re-insert after a delete resurfaces. An
+    * id with any pending row is served from the PENDING side (the
+    * newer write shadows the graph's copy — an updated embedding must
+    * not be answered from the stale node), so the walk's keep-
+    * predicate drops tombstoned AND pending ids. Both side-input id
+    * sets are the churn since the last rebuild — bounded by serving
+    * policy and CollectGuard-capped, loud when the policy is violated.
+    * Scores on both arms are exact rounded cosines, so the soundness
+    * contract (zero mismatches) holds end to end.
+    */
   def searchFrameLive(
       spark: SparkSession,
       indexDir: String,

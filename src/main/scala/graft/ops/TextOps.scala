@@ -228,31 +228,12 @@ object TextOps {
   }
 
   // ---------------------------------------------------------------- SimHash
-  /** 64-bit SimHash over tokens: bit j of the signature is the sign of the
-    * sum over tokens of (bit j of xxhash64(token) ? +1 : -1).
-    * Output: (doc_id, simhash bigint) — deterministic.
-    */
-  def simhash(docs: DataFrame): DataFrame = {
-    val exploded = docs
-      .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
-      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val bitSums = (0 until 64).map { j =>
-      sum(when(expr(s"(h >> $j) & 1") === 1, 1).otherwise(-1)).as(s"b_$j")
-    }
-    val withBits = exploded.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until 64)
-      .map(j => when(col(s"b_$j") > 0, expr(s"CAST(1 AS BIGINT) << $j")).otherwise(0L))
-      .reduce(_.bitwiseOR(_))
-    withBits.select(col("doc_id"), sig.as("simhash"))
-  }
-
-  /** 32-bit SimHash over an ENGINE-PORTABLE hash: bit j comes from the
-    * first 8 hex chars of md5(token), which Spark and DuckDB compute
-    * identically — so unlike [[simhash]]'s xxhash64 family, this variant's
-    * signatures are exact-oracle-checkable cross-engine. 32 bits (not 64)
-    * keeps the hex→int conversion inside safe BIGINT range in both
-    * engines. [[simhash]] stays the production default: wider fingerprint,
-    * one cheap 8-byte hash per token instead of a digest + base-16 parse.
+  /** 32-bit SimHash over an ENGINE-PORTABLE hash: bit j of the signature
+    * is the sign of the sum over tokens of (bit j of h(token) ? +1 : -1),
+    * where h is the first 8 hex chars of md5(token), which Spark and
+    * DuckDB compute identically — so the signatures are
+    * exact-oracle-checkable cross-engine. 32 bits (not 64) keeps the
+    * hex→int conversion inside safe BIGINT range in both engines.
     */
   def simhash32Portable(docs: DataFrame): DataFrame =
     portableSimhash(docs, bits = 32, hexChars = 8, outCol = "simhash32")
@@ -1395,8 +1376,7 @@ object TextOps {
     }),
 
     // SimHash signatures over the engine-portable 32-bit md5 family —
-    // exact-oracle (the 64-bit xxhash64 [[simhash]] stays the production
-    // fingerprint; SimhashSpec pins its semantics).
+    // exact-oracle.
     "x03_simhash" -> ((s, dir) => simhash32Portable(t(s, dir, "documents")).orderBy("doc_id")),
 
     // SimHash near-dup pairs via Hamming-band LSH — the banded equi-join

@@ -4,8 +4,6 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.util.zip.{CRC32, GZIPOutputStream, Inflater}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** One parsed WARC record: the named headers (case preserved, first
   * occurrence wins) and the raw content block. `gzipped` records whether
   * the record arrived as its own gzip member — the layout
@@ -14,7 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 case class WarcRecord(headers: Map[String, String], block: Array[Byte], gzipped: Boolean) {
   def header(name: String): Option[String] = headers.get(name.toLowerCase)
-  def warcType: String = header("WARC-Type").getOrElse("")
   def targetUri: String = header("WARC-Target-URI").getOrElse("")
   def contentLength: Long = header("Content-Length").map(_.trim.toLong).getOrElse(-1L)
 }
@@ -35,8 +32,7 @@ case class WarcRecord(headers: Map[String, String], block: Array[Byte], gzipped:
   *
   * Scale posture: segments are the unit of parallelism — gzip members
   * are not block-splittable, so (like every public WARC reader) one task
-  * owns one segment and throughput scales with segment COUNT. The
-  * [[readDir]] source reads whole segments via `binaryFile`; crawls
+  * owns one segment and throughput scales with segment COUNT. Crawls
   * shard into many ~1 GiB segments, so a 100 TB corpus is ~100k
   * independent tasks, not one giant file.
   */
@@ -206,27 +202,5 @@ object WarcCodec {
     if ((data.length & 0xffffffffL) != le32(trailerAt + 4))
       fail(s"ISIZE mismatch (stored ${le32(trailerAt + 4)}, inflated ${data.length})")
     (data, trailerAt + 8 - from)
-  }
-
-  // -------------------------------------------------------------- source
-
-  /** Read a directory of `.warc` / `.warc.gz` segments into one row per
-    * record. Whole-segment tasks (members are not block-splittable);
-    * parallelism = segment count, which is how crawl corpora shard.
-    */
-  def readDir(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (seg, bytes) =>
-        parse(bytes).zipWithIndex.map { case (r, i) =>
-          (seg, i, r.warcType, r.targetUri, r.contentLength, r.gzipped, r.block)
-        }
-      }
-      .toDF("segment", "record_idx", "warc_type", "target_uri", "content_length", "gzipped", "block")
   }
 }

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions.{col, collect_list, count, explode, expr, 
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.sources.TrainingShards
-
 /** The streaming CURATION rung: ingest → exact-dedup → quality floor →
   * training shards, running incrementally — the stream twin of the
   * batch `d16_corpus_curation` keeper chain landing in the
@@ -27,8 +25,7 @@ import graft.sources.TrainingShards
   * accepted document — the same cardinality the batch keeper aggregate
   * shuffles, held in the state store instead. On a truly unbounded
   * crawl, bound it by re-keying to `dropDuplicatesWithinWatermark` on
-  * an ingest-time column (the events twin at [[EventStreams.dedupEvents]]
-  * shows the shape); the synthetic documents table carries no ingest
+  * an ingest-time column; the synthetic documents table carries no ingest
   * timestamp, so the unbounded-state exact form is the faithful twin
   * here and the caveat is this scaladoc.
   */
@@ -67,136 +64,6 @@ object DocumentStreams {
       .dropDuplicates("content_hash")
       .filter(col("n_tokens") >= 5 && col("n_chars") >= 20)
 
-  /** Wires the curated stream into the `graft-shards` container: every
-    * micro-batch appends its accepted documents as jsonl.gz shards and
-    * merges the manifest in the same commit, so the shard directory is
-    * readable (and consistent) between any two batches. The batch id
-    * pins the write's job token, so a micro-batch REPLAYED after a
-    * failure (committed to the sink but not yet to the stream
-    * checkpoint) replaces its own earlier shards at commit instead of
-    * appending the same documents twice.
-    */
-  def curatedShardStream(
-      docs: DataFrame,
-      outDir: String,
-      checkpoint: String,
-      maxDocsPerShard: Long = 100000L
-  ): DataStreamWriter[org.apache.spark.sql.Row] =
-    curatedDocuments(docs)
-      .drop("content_hash", "n_tokens")
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TrainingShards.write(batch, outDir, maxDocsPerShard = maxDocsPerShard,
-          mode = "append", jobToken = Some(f"fb$batchId%06d"))
-      }
-
-  /** The same curated stream through the sink's NATIVE streaming write
-    * (`TableCapability.STREAMING_WRITE`): no foreachBatch hook — the
-    * epoch commit itself merges the manifest, shard names are
-    * epoch-scoped so replayed epochs cannot collide, and the directory
-    * is a loadable corpus between any two epochs. Use this form when
-    * no per-batch side logic is needed; [[curatedShardStream]] shows
-    * the foreachBatch hook for when there is (the reference's
-    * watermark-write slot).
-    */
-  /** Streaming heavy hitters: the Misra-Gries summary as CROSS-BATCH
-    * state — one ≤k-entry counter map per source lives in the state
-    * store, each micro-batch folds its tokens into it with the same
-    * update rule the batch aggregate uses
-    * ([[graft.functions.MisraGries.updateMap]]), and every batch emits
-    * the current candidate set with the tokens-seen total. Because the
-    * state is the summary itself, the MG guarantee holds over the
-    * stream's ENTIRE history: any token whose frequency across all
-    * batches so far exceeds n/(k+1) is present — a token can become
-    * heavy cumulatively without ever being heavy within one batch and
-    * still surface. State posture: k counters per source, forever —
-    * bounded regardless of stream length, the whole point of running a
-    * sketch instead of a streaming groupBy(token) whose state grows
-    * with vocabulary.
-    */
-  /** Per-source sketch state: the tokens-seen total (the θ-threshold
-    * n/(k+1) needs it) next to the ≤k MG counters.
-    */
-  case class HeavyHitterState(n: Long, counters: Map[String, Long])
-
-  def streamingHeavyHitters(
-      docs: DataFrame, k: Int = 49): org.apache.spark.sql.Dataset[(String, Long, Seq[String])] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    import org.apache.spark.sql.functions.explode
-    docs
-      .select(col("source"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HeavyHitterState, (String, Long, Seq[String])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, String)], state: GroupState[HeavyHitterState]) =>
-          val prior = state.getOption.getOrElse(HeavyHitterState(0L, Map.empty))
-          val m = scala.collection.mutable.HashMap.empty[String, Long]
-          prior.counters.foreach { case (t, c) => m.update(t, c) }
-          var n = prior.n
-          rows.foreach { case (_, tok) =>
-            graft.functions.MisraGries.updateMap(m, tok, k)
-            n += 1
-          }
-          state.update(HeavyHitterState(n, m.toMap))
-          Iterator((source, n, m.keysIterator.toSeq.sorted))
-      }
-  }
-
-  /** Streaming per-source token budget — r06's curation cap as an
-    * incremental flow: the state store carries one (tokens-admitted,
-    * closed) pair per source (forever bounded state), each micro-batch
-    * walks its documents in doc_id order and admits while the source's
-    * cumulative stays within the budget; later batches resume from the
-    * persisted state, so the budget holds across the whole stream, not
-    * per batch. Semantics MATCH r06's monotone prefix-sum filter
-    * exactly: the first doc whose cumulative would exceed the budget
-    * CLOSES the source — it and everything after it are dropped, even
-    * smaller docs that would individually still fit. (r06's
-    * `cum <= budget` over a monotone running sum is truncation, not
-    * greedy skip-and-continue; matching it means the batch cap over a
-    * backfill and this streaming cap over the live tail select the
-    * SAME documents.) Determinism: the walk order is (batch arrival,
-    * doc_id) — arrival order is the stream's time axis; doc_id breaks
-    * ties within a batch (the batch's rows are buffered and sorted per
-    * source — bounded by batch size; cap batches with
-    * maxFilesPerTrigger at scale).
-    *
-    * Emits the ADMITTED docs with their running cumulative.
-    */
-  case class BudgetState(consumed: Long, closed: Boolean)
-
-  def streamingTokenBudget(
-      docs: DataFrame, budget: Long): org.apache.spark.sql.Dataset[(String, Long, Long, Long)] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    docs
-      .select(col("source"), col("doc_id"),
-        size(split(lower(trim(col("text"))), "\\s+")).cast("long").as("n_tokens"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BudgetState, (String, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, Long, Long)], state: GroupState[BudgetState]) =>
-          var st = state.getOption.getOrElse(BudgetState(0L, closed = false))
-          val admitted = rows.toSeq.sortBy(_._2).flatMap { case (_, id, nt) =>
-            if (!st.closed && st.consumed + nt <= budget) {
-              st = st.copy(consumed = st.consumed + nt)
-              Some((source, id, nt, st.consumed))
-            } else {
-              st = st.copy(closed = true)
-              None
-            }
-          }
-          state.update(st)
-          admitted.iterator
-      }
-  }
-
   /** Streaming dedup with BOUNDED state: a Bloom filter per key-space
     * partition instead of `dropDuplicates`' one-row-per-distinct-hash
     * state. The exact rung ([[curatedDocuments]]) is the right default;
@@ -218,8 +85,8 @@ object DocumentStreams {
     * content hash, so every copy of a document — whatever batch it
     * arrives in — meets the same filter. Uses Spark's own
     * `util.sketch.BloomFilter` (the q50 sketch) serialized into the
-    * state store. Within a batch the group walks rows in doc_id order
-    * (the budget rung's determinism rule).
+    * state store. Within a batch the group walks rows in doc_id order,
+    * so the admitted set is deterministic.
     */
   case class BloomDedupState(bytes: Array[Byte], admitted: Long)
 
@@ -286,6 +153,13 @@ object DocumentStreams {
           .as("embedding"))
   }
 
+  /** Wires the curated stream into the `graft-shards` container through
+    * the sink's NATIVE streaming write (`TableCapability.STREAMING_WRITE`),
+    * with no foreachBatch hook: the epoch commit itself merges the
+    * manifest, shard names are epoch-scoped so replayed epochs cannot
+    * collide, and the directory is a loadable corpus between any two
+    * epochs.
+    */
   def curatedShardStreamNative(
       docs: DataFrame,
       outDir: String,

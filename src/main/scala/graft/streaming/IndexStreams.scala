@@ -72,8 +72,8 @@ object IndexStreams {
     // Stage-then-publish: land in an underscore-prefixed staging dir
     // (Hadoop's hidden-path filter makes `_…` invisible to every reader),
     // then publish it with [[graft.ingest.Publish.stagedDir]]: an EMPTY
-    // batch (a delete-only epoch through the churn stream) publishes
-    // nothing. Replay overwrites the staging dir. Still ONE Spark job.
+    // batch publishes nothing. Replay overwrites the staging dir. Still
+    // ONE Spark job.
     val staging = new org.apache.hadoop.fs.Path(s"$indexDir/stream_assignment/_staging_batch=$batchId")
     assigned
       .drop("cos_sim")
@@ -105,104 +105,6 @@ object IndexStreams {
       .parquet(s"$indexDir/tombstones/batch=$batchId")
   }
 
-  /** Streamed-ops schema: `op` is "upsert" or "delete"; delete rows
-    * need only `vec_id`.
-    */
-  val opsSchema: StructType = StructType(Seq(
-    StructField("op", StringType),
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)
-  ))
-
-  /** File-source stream over a drop-folder of mixed upsert/delete rows. */
-  def readOpsStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(opsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-
-  /** Wire a CHURNING stream: each micro-batch's upsert rows fold into
-    * the index and its delete rows land as the SAME epoch's tombstones
-    * — one batch id covers both sides, so replay re-lands both
-    * idempotently and the search-time last-writer-wins merge sees a
-    * consistent epoch. Unknown ops fail loudly (a silently-dropped
-    * delete is a correctness bug, not a formatting nit).
-    */
-  def streamingIvfUpsertWithDeletes(
-      opsStream: DataFrame,
-      indexDir: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = opsStream.sparkSession
-    opsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // centroids re-loaded PER micro-batch: a retrain compaction
-        // republishes the centroid sidecar mid-stream, and assigning
-        // pending rows under the old geometry while searches probe with
-        // the new one would let the cluster-pruned tail miss them
-        val cents = IvfIndex.loadCentroids(spark, indexDir)
-        val cached = batch.localCheckpoint()
-        val badOps = cached.filter(!col("op").isin("upsert", "delete")).limit(1)
-          .collect()
-        require(badOps.isEmpty,
-          s"unknown op '${badOps.headOption.map(_.getAs[String]("op")).getOrElse("")}' in batch $batchId")
-        val (rows, meanCos) = upsertBatch(
-          cached.filter(col("op") === "upsert").drop("op"), batchId, indexDir, cents)
-        val deletes = cached.filter(col("op") === "delete")
-          .select("vec_id").collect().map(_.getLong(0)).toSeq
-        // delete-less epoch ⇒ no tombstone dir (absence is the
-        // representation; an empty parquet batch dir is a pointless
-        // channel read for every later merge-on-read search)
-        if (deletes.nonEmpty) tombstoneBatch(spark, deletes, batchId, indexDir)
-        logBatchMetric(spark, indexDir, batchId, rows, meanCos)
-      }
-  }
-
-  /** Wire a CHURNING stream into the GRAPH index
-    * ([[graft.ops.NswIndex]]): upsert rows land in the pending channel
-    * ([[graft.ops.NswIndex.insertBatch]] — served exactly by the tail
-    * scan until a rebuild folds them into the graph), delete rows land
-    * as the SAME epoch's tombstones. One batch id covers both sides
-    * (replay re-lands both idempotently); unknown ops fail loudly.
-    * The rebuild cadence is the caller's serving policy
-    * ([[graft.ops.NswIndex.rebuildLive]] when the channels outgrow it)
-    * — the stream only accumulates, exactly like the IVF twin.
-    */
-  def streamingGraphUpsertWithDeletes(
-      opsStream: DataFrame,
-      indexDir: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = opsStream.sparkSession
-    opsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch centroid load — same staleness contract as the IVF
-        // twin: a rebuildLive(retrain=true) mid-stream must not strand
-        // pending rows under retired geometry
-        val cents = IvfIndex.loadCentroids(spark, indexDir)
-        val cached = batch.localCheckpoint()
-        val badOps = cached.filter(!col("op").isin("upsert", "delete")).limit(1)
-          .collect()
-        require(badOps.isEmpty,
-          s"unknown op '${badOps.headOption.map(_.getAs[String]("op")).getOrElse("")}' in batch $batchId")
-        val rows = graft.ops.NswIndex.insertBatch(
-          cached.filter(col("op") === "upsert").drop("op"), batchId, indexDir, cents)
-        val deletes = cached.filter(col("op") === "delete")
-          .select("vec_id").collect().map(_.getLong(0)).toSeq
-        // a delete-less epoch writes NO tombstone dir: an empty batch=
-        // dir costs every later live search a pointless channel read
-        // (absence is the representation — the insertBatch discipline;
-        // skipping is as replay-idempotent as overwriting)
-        if (deletes.nonEmpty) tombstoneBatch(spark, deletes, batchId, indexDir)
-        logBatchMetric(spark, indexDir, batchId, rows, Double.NaN)
-      }
-  }
-
   /** Record one batch's drift metric under its OWN `batch=<id>`
     * directory (mirroring the data path's layout), so an epoch replay
     * overwrites the same row instead of appending a duplicate — the
@@ -218,187 +120,6 @@ object IndexStreams {
   def readUpsertLog(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/upsert_log").select("batch", "rows", "mean_cos")
 
-  /** One micro-batch under the RETRAIN POLICY, exposed separately from
-    * the stream wiring (the [[upsertBatch]] discipline) so specs can
-    * drive the exact replay case. Lands the batch + its drift metric as
-    * always, then applies the policy rung: a non-empty batch whose mean
-    * cosine-to-assigned-centroid falls below `driftFloor` means the
-    * serving geometry no longer models the arriving data, and the loop
-    * runs ONE [[graft.ops.IvfIndex.retrainLiveIndex]] — the atomic
-    * generation flip, folding everything through this epoch, after
-    * which the NEXT batch assigns under the new geometry (per-batch
-    * centroid loads — the round-15 staleness contract).
-    *
-    * WHAT THE METRIC SEES — measured, not assumed: mean
-    * cos-to-assigned-centroid detects LOW-FIT drift (novel directions
-    * no cell models — a new embedding model, a new modality: vectors
-    * orthogonal to the centroid span assign at cos ≈ 0 against an
-    * in-distribution ~0.22 on the gate corpus), but it is BLIND to
-    * antipodal/symmetric drift: the s44 wave assigns at mean cos 0.226
-    * vs in-distribution 0.222 on the isotropic corpus — geometry
-    * damage without fit damage. A corpus under that drift class needs
-    * the scheduled retrain (s44's explicit call) or a recall canary,
-    * not this rung alone (RetrainTriggerSpec pins both sides).
-    *
-    * REPLAY-SAFE by
-    * the consumedThrough guard: a retrain records the triggering epoch
-    * in the marker, so a replayed epoch (failure after the retrain,
-    * before the stream checkpoint committed) re-lands its rows
-    * idempotently but can never re-trigger — its batchId is no longer
-    * beyond the fold. Returns true iff this call retrained.
-    */
-  def upsertBatchWithRetrain(batch: DataFrame, batchId: Long, indexDir: String,
-      driftFloor: Double, retrainK: Int, retrainIters: Int = 2): Boolean = {
-    val spark = batch.sparkSession
-    val cents = IvfIndex.loadCentroids(spark, indexDir)
-    val (rows, meanCos) = upsertBatch(batch, batchId, indexDir, cents)
-    logBatchMetric(spark, indexDir, batchId, rows, meanCos)
-    val st = IvfIndex.readLiveState(spark, indexDir)
-    val shouldRetrain = rows > 0 && meanCos < driftFloor && batchId > st.consumedThrough
-    if (shouldRetrain)
-      IvfIndex.retrainLiveIndex(spark, indexDir, k = retrainK, iters = retrainIters)
-    shouldRetrain
-  }
-
-  /** [[streamingIvfUpsert]] with the retrain policy rung wired in: the
-    * production loop's answer to "when does s44 run?" — the s24 drift
-    * metric crossing `driftFloor` triggers the retrain INSIDE the loop
-    * (the p06 weight-refresh pattern), serving stays continuous across
-    * the flip (merge-on-read readers resolve through the marker), and
-    * replayed epochs cannot double-retrain (see
-    * [[upsertBatchWithRetrain]]).
-    */
-  def streamingIvfUpsertWithRetrain(
-      embStream: DataFrame,
-      indexDir: String,
-      checkpoint: String,
-      driftFloor: Double,
-      retrainK: Int,
-      retrainIters: Int = 2): DataStreamWriter[org.apache.spark.sql.Row] =
-    embStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatchWithRetrain(batch, batchId, indexDir, driftFloor, retrainK, retrainIters)
-        () // Unit — the policy's decision is read back from the marker
-      }
-
-  // ---- RECALL CANARY: the retrain trigger for fit-blind drift --------
-  //
-  // The fit metric (mean cos-to-assigned-centroid) has a MEASURED blind
-  // spot: the s44 antipodal wave assigns at in-distribution fit (0.226
-  // vs 0.222) while scattering each query's true neighborhood across
-  // cells the probe ranking near-ties on — recall damage with zero fit
-  // damage (RetrainTriggerSpec pins the blindness). The canary measures
-  // what the user actually experiences instead of a geometric proxy:
-  // serve a small query panel drawn FROM THE ARRIVING BATCH (serving
-  // traffic follows the drift — a fixed pre-drift panel would miss a
-  // drift its own directions never visit) at the production probe depth
-  // and at a reference depth, and compare. Coherent in-distribution
-  // batches keep the two aligned (the ranking's top cells hold the
-  // neighborhood); wave-scattered neighborhoods diverge. Cost per
-  // batch is bounded: two [[graft.ops.IvfIndex.searchIndexLiveMany]]
-  // calls over nCanary queries — partition-pruned batched scans, no
-  // driver loop, no brute-force arm — so the canary stays affordable
-  // at 100 TB where an exact-recall probe would be a full scan.
-
-  /** Mean recall-overlap@k of the live index for `panel`: per query,
-    * |top-k(nprobeServe) ∩ top-k(nprobeRef)| / k, averaged. A pure
-    * measurement (no side effects); both arms ride the batched live
-    * searcher, self-excluded so a batch-sampled query cannot score its
-    * own row.
-    */
-  def canaryRecall(spark: SparkSession, indexDir: String, panel: Map[Long, Array[Float]],
-      k: Int, nprobeServe: Int, nprobeRef: Int): Double = {
-    require(panel.nonEmpty, "canaryRecall needs at least one query")
-    require(nprobeServe < nprobeRef,
-      s"reference probe depth must exceed serving depth ($nprobeServe >= $nprobeRef)")
-    val serve = IvfIndex.searchIndexLiveMany(spark, indexDir, panel, k, nprobeServe,
-      excludeSelf = true)
-    val ref = IvfIndex.searchIndexLiveMany(spark, indexDir, panel, k, nprobeRef,
-      excludeSelf = true)
-    val overlap: Map[Long, Long] = serve.select("query_id", "vec_id")
-      .join(ref.select("query_id", "vec_id"), Seq("query_id", "vec_id"))
-      .groupBy("query_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    panel.keys.toSeq
-      .map(qid => overlap.getOrElse(qid, 0L).toDouble / k)
-      .sum / panel.size
-  }
-
-  /** Record one batch's canary reading under its own `batch=<id>`
-    * directory (the [[logBatchMetric]] idempotency contract).
-    */
-  def logCanaryMetric(spark: SparkSession, indexDir: String, batchId: Long,
-      nQueries: Int, recall: Double): Unit = {
-    import spark.implicits._
-    Seq((nQueries, recall)).toDF("n_queries", "recall")
-      .write.mode("overwrite").parquet(s"$indexDir/canary_log/batch=$batchId")
-  }
-
-  /** Read the canary log back as a (batch, n_queries, recall) table. */
-  def readCanaryLog(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/canary_log").select("batch", "n_queries", "recall")
-
-  /** One micro-batch under the CANARY retrain policy: land the batch
-    * (and the fit metric, for the log's continuity), then measure the
-    * canary over the `nCanary` smallest vec_ids of the batch —
-    * deterministic, so an epoch REPLAY measures the same panel — and
-    * run ONE [[graft.ops.IvfIndex.retrainLiveIndex]] when mean
-    * recall-overlap falls below `recallFloor`. The consumedThrough
-    * guard makes replays flip-proof exactly as in
-    * [[upsertBatchWithRetrain]]; the two policy rungs compose (run both
-    * when a deployment faces both drift classes). Returns true iff this
-    * call retrained.
-    */
-  def upsertBatchWithCanary(batch: DataFrame, batchId: Long, indexDir: String,
-      recallFloor: Double, retrainK: Int, retrainIters: Int = 2,
-      nCanary: Int = 4, k: Int = 10, nprobeServe: Int = 4, nprobeRef: Int = 16): Boolean = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val cents = IvfIndex.loadCentroids(spark, indexDir)
-    val (rows, meanCos) = upsertBatch(batch, batchId, indexDir, cents)
-    logBatchMetric(spark, indexDir, batchId, rows, meanCos)
-    if (rows == 0L) return false
-    val panel: Map[Long, Array[Float]] = batch
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").limit(nCanary)
-      .as[(Long, Array[Float])].collect().toMap
-    val recall = canaryRecall(spark, indexDir, panel, k, nprobeServe, nprobeRef)
-    logCanaryMetric(spark, indexDir, batchId, panel.size, recall)
-    val st = IvfIndex.readLiveState(spark, indexDir)
-    val shouldRetrain = recall < recallFloor && batchId > st.consumedThrough
-    if (shouldRetrain)
-      IvfIndex.retrainLiveIndex(spark, indexDir, k = retrainK, iters = retrainIters)
-    shouldRetrain
-  }
-
-  /** [[streamingIvfUpsert]] with the canary policy rung wired in — the
-    * streaming twin of [[streamingIvfUpsertWithRetrain]] for the drift
-    * class the fit metric provably misses.
-    */
-  def streamingIvfUpsertWithCanary(
-      embStream: DataFrame,
-      indexDir: String,
-      checkpoint: String,
-      recallFloor: Double,
-      retrainK: Int,
-      retrainIters: Int = 2,
-      nCanary: Int = 4,
-      k: Int = 10,
-      nprobeServe: Int = 4,
-      nprobeRef: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] =
-    embStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatchWithCanary(batch, batchId, indexDir, recallFloor, retrainK,
-          retrainIters, nCanary, k, nprobeServe, nprobeRef)
-        ()
-      }
-
   /** Wire the stream: every micro-batch folds into the index and the
     * drift metric lands in `indexDir/upsert_log/batch=<id>` (rows,
     * mean_cos) — readable as a table by whoever watches the index.
@@ -413,7 +134,10 @@ object IndexStreams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch centroid load (see the deletes twin above)
+        // centroids re-loaded PER micro-batch: a retrain compaction
+        // republishes the centroid sidecar mid-stream, and assigning
+        // pending rows under the old geometry while searches probe with
+        // the new one would let the cluster-pruned tail miss them
         val cents = IvfIndex.loadCentroids(spark, indexDir)
         val (rows, meanCos) = upsertBatch(batch, batchId, indexDir, cents)
         logBatchMetric(spark, indexDir, batchId, rows, meanCos)

@@ -41,12 +41,6 @@ class AhoCorasickSpec extends AnyFunSuite {
     }
   }
 
-  test("findMatches returns per-occurrence end positions") {
-    val ac = AhoCorasick.build(Seq("ab", "b"))
-    // "abab": ab ends at 2 and 4; b ends at 2 and 4
-    assert(ac.findMatches("abab").sorted === Seq((0, 2), (0, 4), (1, 2), (1, 4)))
-  }
-
   test("hasBorder: border-free patterns cannot self-overlap") {
     assert(!AhoCorasick.hasBorder("merge slow"))
     assert(!AhoCorasick.hasBorder("vector"))

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** [[IvfIndex.searchIndexAdaptive]] / [[IvfIndex.searchIndexLiveAdaptive]]
-  * — per-query probe depth from the spherical stop bound. Contracts:
+/** [[IvfIndex.searchIndexLiveAdaptive]] — per-query probe depth from the
+  * spherical stop bound. Contracts 1 and 2 run on indexes with empty
+  * channels, where the walk reads base cells only. Contracts:
   *
   *  1. STOP-RULE MECHANISM (synthetic 2-D geometry, hand-checkable): an
   *     easy query stops after ONE cell because the other cell's
@@ -57,7 +58,7 @@ class AdaptiveProbeSpec extends AnyFunSuite {
       IvfIndex.saveCellRadii(spark, dir)
       // easy: inside cluster A — after its cell, the other cell's bound
       // (cos(~90° − r) ≈ 0) is hopeless against k-th ≈ cos(18°)
-      val easy = IvfIndex.searchIndexAdaptive(spark, dir, v(1.0), k = 5,
+      val easy = IvfIndex.searchIndexLiveAdaptive(spark, dir, v(1.0), k = 5,
         minProbe = 1, probeStep = 1, probeCap = 2)
       assert(easy.stoppedByBound, "easy query must stop by bound")
       assert(easy.probed.length == 1, s"easy query should read ONE cell, read ${easy.probed}")
@@ -66,7 +67,7 @@ class AdaptiveProbeSpec extends AnyFunSuite {
       // hard: at 55° the nearer cell (B, bound ≈ cos(35°) ≈ 0.82) goes
       // first, but its 5th-best member (cos(43°) ≈ 0.73) cannot beat
       // cell A's bound (≈ cos(37°) ≈ 0.80) — the walk must continue
-      val hard = IvfIndex.searchIndexAdaptive(spark, dir, v(55.0), k = 5,
+      val hard = IvfIndex.searchIndexLiveAdaptive(spark, dir, v(55.0), k = 5,
         minProbe = 1, probeStep = 1, probeCap = 2)
       assert(hard.probed.length == 2, s"between-clusters query must probe both cells, got ${hard.probed}")
       val exactHard = rows(IvfIndex.searchIndex(spark, dir, v(55.0), k = 5, nprobe = 2))
@@ -86,7 +87,7 @@ class AdaptiveProbeSpec extends AnyFunSuite {
         .select("vec_id", "embedding")
         .as[(Long, Array[Float])].collect().toMap
       panel.foreach { case (qid, qe) =>
-        val got = IvfIndex.searchIndexAdaptive(spark, dir, qe, k = 10,
+        val got = IvfIndex.searchIndexLiveAdaptive(spark, dir, qe, k = 10,
           minProbe = 2, probeStep = 2, probeCap = 16, excludeId = Some(qid))
         // these 64-dim near-isotropic cells have ~90° radii, so the
         // spherical bound saturates at ~1 and a sub-1 k-th can never

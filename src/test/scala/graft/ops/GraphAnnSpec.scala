@@ -337,7 +337,7 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(rebuilt == fresh, s"rebuild drifted from the fresh build\nrebuilt: $rebuilt\nfresh:   $fresh")
     assert(rebuilt.nonEmpty && deleted.forall(id => !rebuilt.contains(id.toString)))
     // cells really shrank — in the generation the marker publishes
-    // (gen 0 stays on disk for in-flight readers until vacuumCells)
+    // (gen 0 stays on disk for in-flight readers)
     val gen = IvfIndex.readLiveState(spark, idxDir).gen
     assert(gen == 1L, s"rebuild must publish a new generation, got $gen")
     assert(spark.read.parquet(NswIndex.cellsDir(idxDir, gen)).count() ==

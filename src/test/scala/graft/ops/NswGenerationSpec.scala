@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   *     that contract; here we pin the marker + layout);
   *  3. KILL BETWEEN FLIP AND CHANNEL DELETE: a leftover consumed
   *     tombstone batch (id ≤ consumedThrough) must NOT re-kill the
-  *     folded survivor it once named — the window excludes it;
-  *  4. vacuum reclaims superseded generations without touching serving.
+  *     folded survivor it once named — the window excludes it.
   */
 class NswGenerationSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -38,7 +37,7 @@ class NswGenerationSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("kill-seam: an unpublished partial cells_g1 is invisible; the flip is atomic; " +
-    "a leftover consumed tombstone cannot double-apply; vacuum reclaims the old gen") {
+    "a leftover consumed tombstone cannot double-apply") {
     val dir = tmp("nsw-gen")
     try {
       // gen 0 + churn: 100 pending inserts, 2 deletes (one base, one pending)
@@ -82,13 +81,6 @@ class NswGenerationSpec extends AnyFunSuite {
       assert(afterLeftover == served,
         s"a consumed tombstone batch re-applied against the folded generation\n" +
           s"served: $served\nafter:  $afterLeftover")
-
-      // 4. vacuum reclaims gen 0; serving unchanged
-      val deleted = NswIndex.vacuumCells(spark, dir, retain = 0)
-      assert(deleted.contains(s"$dir/cells"), s"vacuum kept the superseded gen: $deleted")
-      assert(!new java.io.File(s"$dir/cells").exists())
-      val afterVacuum = rows(NswIndex.searchFrame(spark, dir, cents2, qe(0L), 0L, 10, 16, 48))
-      assert(afterVacuum == served, "vacuum of the superseded generation changed serving")
     } finally rm(dir)
   }
 

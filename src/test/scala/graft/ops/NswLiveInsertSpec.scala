@@ -255,24 +255,15 @@ class NswLiveInsertSpec extends AnyFunSuite {
     } finally rm(dir)
   }
 
-  test("a mixed upsert+delete STREAM drives the graph channels: both sides of an " +
-    "epoch apply, serving reflects them, and the rebuild folds the stream's state") {
-    import spark.implicits._
+  test("one epoch's inserts and delete drive the graph channels: both sides " +
+    "apply, serving reflects them, and the rebuild folds the epoch's state") {
     val dir = tmp("nsw-ops")
-    val drop = tmp("nsw-ops-drop")
-    val ckpt = tmp("nsw-ops-ckpt")
     try {
       val cents = NswIndex.build(emb.filter(col("vec_id") >= 100), dir,
         k = 16, iters = 2, m = 8, efC = 32)
-      // one file = one epoch: upserts 0..49 AND a delete of base id 105
-      emb.filter(col("vec_id") < 50)
-        .select(lit("upsert").as("op"), col("vec_id"), col("embedding"), col("label"))
-        .unionByName(emb.filter(col("vec_id") === 105L)
-          .select(lit("delete").as("op"), col("vec_id"), col("embedding"), col("label")))
-        .coalesce(1).write.mode("append").parquet(drop)
-      val q = graft.streaming.IndexStreams.streamingGraphUpsertWithDeletes(
-        graft.streaming.IndexStreams.readOpsStream(spark, drop), dir, ckpt).start()
-      q.processAllAvailable(); q.stop()
+      // epoch 0: inserts 0..49 AND a delete of base id 105
+      NswIndex.insertBatch(emb.filter(col("vec_id") < 50), 0L, dir, cents)
+      graft.streaming.IndexStreams.tombstoneBatch(spark, Seq(105L), 0L, dir)
       val live = rows(NswIndex.searchFrameLive(spark, dir, cents, qe(0L), 0L, 600, 16, 48))
       val ids = live.map(_._1).toSet
       assert(ids.contains(5L), "streamed graph upsert not served")
@@ -281,7 +272,7 @@ class NswLiveInsertSpec extends AnyFunSuite {
       val cents2 = NswIndex.rebuildLive(spark, dir, k = 16, iters = 2, m = 8, efC = 32)
       val post = rows(NswIndex.searchFrame(spark, dir, cents2, qe(0L), 0L, 600, 16, 48))
       assert(post.map(_._1).toSet == ids, "the fold changed the served corpus")
-    } finally { rm(dir); rm(drop); rm(ckpt) }
+    } finally rm(dir)
   }
 
   test("a meta-built index refuses inserts without its attribute column and " +

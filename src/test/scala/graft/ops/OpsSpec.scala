@@ -174,23 +174,6 @@ class OpsSpec extends AnyFunSuite {
       s"expected the loud posCap guard, got: ${messages(e).mkString(" | ")}")
   }
 
-  test("production 64-bit simhash: identical docs collide, near-dups land close, distinct docs apart") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta"), // exact copy
-      (3L, "alpha beta gamma delta epsilon zeta eta iota"), // one token swapped
-      (4L, "completely unrelated words about something else entirely")
-    ).toDF("doc_id", "text")
-    val sig = TextOps.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-    assert(sig(1L) == sig(2L), "identical text must produce identical simhash")
-    assert(hamming(sig(1L), sig(3L)) < hamming(sig(1L), sig(4L)),
-      s"near-dup must be closer than unrelated: ${hamming(sig(1L), sig(3L))} vs ${hamming(sig(1L), sig(4L))}")
-    val again = TextOps.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again == sig, "simhash must be deterministic")
-  }
-
   test("x02 raw pairs respect the jaccard threshold and ordering") {
     val pairs = TextOps.minhashDedupPairs(
       Tables.t(spark, sfDir, "documents"), shingleWidth = 1, threshold = 0.95).collect()

@@ -75,7 +75,7 @@ class KafkaFramingPropertySpec extends AnyFunSuite {
       Gen.oneOf(0L, -1L, 1L, Long.MinValue, Long.MaxValue, Int.MinValue.toLong, Int.MaxValue.toLong))
     check(Prop.forAll(longGen) { v =>
       val out = new java.io.ByteArrayOutputStream()
-      KafkaLogFormat.writeVarLong(out, v)
+      KafkaLogFixtures.writeVarLong(out, v)
       val bytes = out.toByteArray
       bytes.length <= 10 &&
         KafkaLogFormat.readVarLong(java.nio.ByteBuffer.wrap(bytes)) == v
@@ -93,8 +93,8 @@ class KafkaFramingPropertySpec extends AnyFunSuite {
     check(Prop.forAll(recordsGen, framingGen) { case (recs, (framing, codec)) =>
       val frames = framing match {
         case "v1" => recs.map(r => KafkaLogFormat.encode(r))
-        case "v1wrap" => Seq(KafkaLogFormat.encodeWrapperV1(recs, codec))
-        case "v2" => Seq(KafkaLogFormat.encodeBatchV2(recs, codec))
+        case "v1wrap" => Seq(KafkaLogFixtures.encodeWrapperV1(recs, codec))
+        case "v2" => Seq(KafkaLogFixtures.encodeBatchV2(recs, codec))
       }
       matches(roundTrip(frames, recs.head.offset), recs)
     }, n = 160)
@@ -109,9 +109,9 @@ class KafkaFramingPropertySpec extends AnyFunSuite {
       val frames =
         parts(0).map(r => KafkaLogFormat.encode(r)) ++
           Seq(
-            KafkaLogFormat.encodeGzipWrapperV1(parts(1)),
-            KafkaLogFormat.encodeBatchV2(parts(2)),
-            KafkaLogFormat.encodeBatchV2(parts(3), KafkaLogFormat.GzipCodec))
+            KafkaLogFixtures.encodeGzipWrapperV1(parts(1)),
+            KafkaLogFixtures.encodeBatchV2(parts(2)),
+            KafkaLogFixtures.encodeBatchV2(parts(3), KafkaLogFormat.GzipCodec))
       matches(roundTrip(frames, recs0.head.offset), parts.flatten)
     }, n = 40)
   }

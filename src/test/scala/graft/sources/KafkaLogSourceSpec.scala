@@ -73,7 +73,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
   test("v2 record batch round-trips; CRC-32C catches a flipped byte in the records area") {
     val dir = Files.createTempDirectory("kwire2")
     val records = Seq(rec(10, "alpha", "k0"), rec(11, "beta"), Record(12, 1600000000099L, "k".getBytes, null))
-    val seg = KafkaLogFormat.writeSegmentV2(fs, new Path(dir.toString), records)
+    val seg = KafkaLogFixtures.writeSegmentV2(fs, new Path(dir.toString), records)
     val in = fs.open(seg)
     val len = fs.getFileStatus(seg).getLen
     val got = KafkaLogFormat.readSegment(in, len, seg.toString, skipPayloadsOnly = false).toList
@@ -111,7 +111,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     val gzDir = new Path(root.resolve("gz-0").toString)
     fs.mkdirs(plainDir); fs.mkdirs(gzDir)
     KafkaLogFormat.writeSegment(fs, plainDir, records)
-    KafkaLogFormat.writeSegmentFrames(fs, gzDir, 0L, Seq(KafkaLogFormat.encodeGzipWrapperV1(records)))
+    KafkaLogFormat.writeSegmentFrames(fs, gzDir, 0L, Seq(KafkaLogFixtures.encodeGzipWrapperV1(records)))
 
     def readAll(dir: Path): List[(Long, Long, String, String)] = {
       val seg = new Path(dir, KafkaLogFormat.segmentName(0))
@@ -136,8 +136,8 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("kgzip2")
     val records = (100L until 104L).map(o => rec(o, s"z$o"))
     val frames = Seq(
-      KafkaLogFormat.encodeBatchV2(records, KafkaLogFormat.GzipCodec),
-      KafkaLogFormat.encodeBatchV2( // txn commit marker shape: reader must yield no rows
+      KafkaLogFixtures.encodeBatchV2(records, KafkaLogFormat.GzipCodec),
+      KafkaLogFixtures.encodeBatchV2( // txn commit marker shape: reader must yield no rows
         Seq(Record(104L, 1600000000104L, Array[Byte](0, 0, 0, 1), Array[Byte](0, 0))),
         control = true)
     )
@@ -163,7 +163,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     def readAll(codec: Int, name: String): List[(Long, Long, String, String)] = {
       val dir = new Path(root.resolve(name).toString)
       fs.mkdirs(dir)
-      val seg = KafkaLogFormat.writeSegmentV2(fs, dir, records, codec)
+      val seg = KafkaLogFixtures.writeSegmentV2(fs, dir, records, codec)
       val in = fs.open(seg)
       val got = KafkaLogFormat.readSegment(
         in, fs.getFileStatus(seg).getLen, seg.toString, skipPayloadsOnly = false).toList
@@ -190,11 +190,11 @@ class KafkaLogSourceSpec extends AnyFunSuite {
       got.map(r => (r.offset, new String(r.value)))
     }
     val expected = records.map(r => (r.offset, new String(r.value))).toList
-    assert(drain(KafkaLogFormat.encodeWrapperV1(records, KafkaLogFormat.SnappyCodec), "s-0") == expected)
+    assert(drain(KafkaLogFixtures.encodeWrapperV1(records, KafkaLogFormat.SnappyCodec), "s-0") == expected)
     // modern (spec-checksum) lz4 framing
-    assert(drain(KafkaLogFormat.encodeWrapperV1(records, KafkaLogFormat.Lz4Codec), "l-0") == expected)
+    assert(drain(KafkaLogFixtures.encodeWrapperV1(records, KafkaLogFormat.Lz4Codec), "l-0") == expected)
     // v1-era framing: header checksum hashed over the frame magic too
-    val broken = KafkaLogFormat.encodeLz4BrokenWrapperV1(records)
+    val broken = KafkaLogFixtures.encodeLz4BrokenWrapperV1(records)
     assert(drain(broken, "l-1") == expected)
     // the broken frame really is rejected by a strict spec decoder
     // (otherwise this test would not be exercising the lenient path)
@@ -245,12 +245,12 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     KafkaLogFormat.writeSegmentFrames(fs, dir0, 0L, Seq(
       KafkaLogFormat.encode(rec(0, "old-0")),
       KafkaLogFormat.encode(rec(1, "old-1")),
-      KafkaLogFormat.encodeBatchV2(Seq(rec(2, "new-2"), rec(3, "new-3")))
+      KafkaLogFixtures.encodeBatchV2(Seq(rec(2, "new-2"), rec(3, "new-3")))
     ))
     // audit-1: pure v2 segment
     val dir1 = new Path(root.resolve("audit-1").toString)
     fs.mkdirs(dir1)
-    KafkaLogFormat.writeSegmentV2(fs, dir1, (0L until 3L).map(o => rec(o, s"b$o")))
+    KafkaLogFixtures.writeSegmentV2(fs, dir1, (0L until 3L).map(o => rec(o, s"b$o")))
 
     val checkpoint = Files.createTempDirectory("kmixed-ckpt").toString
     val sink = Files.createTempDirectory("kmixed-sink").toString
@@ -272,7 +272,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
       ("audit", 1, 0L, "b0"), ("audit", 1, 1L, "b1"), ("audit", 1, 2L, "b2")))
 
     // restart after a new v2 segment lands: reads ONLY the appended batch
-    KafkaLogFormat.writeSegmentV2(fs, dir1, Seq(rec(3, "b3")))
+    KafkaLogFixtures.writeSegmentV2(fs, dir1, Seq(rec(3, "b3")))
     val q2 = spark.readStream.format("graft-kafkalog").option("root", root.toString).load()
       .writeStream
       .trigger(Trigger.AvailableNow())
@@ -288,7 +288,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("kmidbatch")
     val dir0 = new Path(root.resolve("t-0").toString)
     fs.mkdirs(dir0)
-    KafkaLogFormat.writeSegmentV2(fs, dir0, (0L until 10L).map(o => rec(o, s"v$o")))
+    KafkaLogFixtures.writeSegmentV2(fs, dir0, (0L until 10L).map(o => rec(o, s"v$o")))
     val stream = new KafkaLogMicroBatchStream(
       root.toString,
       new CaseInsensitiveStringMap(Map("root" -> root.toString, "maxRecordsPerTrigger" -> "4").asJava))
@@ -481,7 +481,7 @@ class KafkaLogSourceSpec extends AnyFunSuite {
   test("frames that end below the start offset are skipped undecoded; a read that covers them still checks CRCs") {
     val root = Files.createTempDirectory("klog-skip")
     val frames = (0L until 4L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
-      Seq(KafkaLogFormat.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
+      Seq(KafkaLogFixtures.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
       (7L until 10L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o")))
     // flip the last payload byte of the v1 frame at offset 1 and of the v2 batch (4..6)
     val bytes = frames.reduce(_ ++ _)
@@ -524,9 +524,9 @@ class KafkaLogSourceSpec extends AnyFunSuite {
   test("a read stops at the first frame starting at its end, undecoded; a straddling frame is decoded whole") {
     val root = Files.createTempDirectory("klog-until")
     val frames = (0L until 4L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
-      Seq(KafkaLogFormat.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
+      Seq(KafkaLogFixtures.encodeBatchV2((4L until 7L).map(o => rec(o, s"v2-$o")))) ++
       (7L until 10L).map(o => KafkaLogFormat.encode(rec(o, s"v1-$o"))) ++
-      Seq(KafkaLogFormat.encodeGzipWrapperV1((10L until 13L).map(o => rec(o, s"gz-$o")))) ++
+      Seq(KafkaLogFixtures.encodeGzipWrapperV1((10L until 13L).map(o => rec(o, s"gz-$o")))) ++
       Seq(KafkaLogFormat.encode(rec(13L, "v1-13")))
     // flip the last payload byte of the v1 frame at offset 7
     val bytes = frames.reduce(_ ++ _)

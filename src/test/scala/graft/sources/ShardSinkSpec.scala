@@ -226,6 +226,8 @@ class ShardSinkSpec extends AnyFunSuite {
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("_MANIFEST.json")), e.toString)
+    val litter = local.toFile.list().filter(n => n.startsWith(".") && n.endsWith(".tmp"))
+    assert(litter.isEmpty, s"the failed publish left its temp file: ${litter.toSeq}")
     TrainingShards.write(ids(20, 30), out)
     val served = TrainingShards.read(spark, out, Some(docs.schema)).select("doc_id").collect()
       .map(_.getLong(0)).sorted.toSeq

@@ -28,7 +28,7 @@ class WarcCodecSpec extends AnyFunSuite {
     val parsed = WarcCodec.parse(rec(7, body))
     assert(parsed.size == 1)
     val r = parsed.head
-    assert(r.warcType == "response")
+    assert(r.header("WARC-Type").contains("response"))
     assert(r.targetUri == "http://h.example.com/doc/7")
     assert(r.contentLength == body.length)
     assert(java.util.Arrays.equals(r.block, body))
@@ -115,26 +115,5 @@ class WarcCodecSpec extends AnyFunSuite {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), p)
     assert(res.passed, res.status.toString)
-  }
-
-  test("readDir reads a directory of .warc and .warc.gz segments") {
-    val spark = graft.SparkSpec.spark
-    val dir = Files.createTempDirectory("warc-src")
-    val plainSeg = rec(10, "plain-body".getBytes(US_ASCII)) ++ rec(11, "second".getBytes(US_ASCII))
-    val gzSeg = WarcCodec.gzipMember(rec(20, "gz-body".getBytes(US_ASCII)))
-    Files.write(dir.resolve("seg-0.warc"), plainSeg)
-    Files.write(dir.resolve("seg-1.warc.gz"), gzSeg)
-    Files.write(dir.resolve("ignored.txt"), "not a segment".getBytes(US_ASCII))
-    val rows = WarcCodec
-      .readDir(spark, dir.toString)
-      .selectExpr("target_uri", "record_idx", "gzipped", "CAST(block AS STRING) AS body")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3)))
-      .sortBy(_._1)
-    assert(rows.toSeq == Seq(
-      ("http://h.example.com/doc/10", 0, false, "plain-body"),
-      ("http://h.example.com/doc/11", 1, false, "second"),
-      ("http://h.example.com/doc/20", 0, true, "gz-body")
-    ))
   }
 }

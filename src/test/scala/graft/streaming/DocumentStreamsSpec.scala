@@ -52,7 +52,7 @@ class DocumentStreamsSpec extends AnyFunSuite {
     stage("f2", "b2.parquet", 1000000100000L)
 
     val docs = DocumentStreams.readDocumentStream(spark, in, maxFilesPerTrigger = 1)
-    val q = DocumentStreams.curatedShardStream(docs, out, ckpt).start()
+    val q = DocumentStreams.curatedShardStreamNative(docs, out, ckpt).start()
     try q.processAllAvailable()
     finally q.stop()
 
@@ -69,138 +69,11 @@ class DocumentStreamsSpec extends AnyFunSuite {
     assert(texts(1L) == longA && texts(6L) == fresh)
     // the duplicate survived exactly once across the whole run
     assert(shard.filter(col("text") === longA).count() == 1)
-
-    // same feed through the NATIVE streaming write (no foreachBatch):
-    // epoch commits merge the manifest; the curated corpus is identical
-    val out2 = Files.createTempDirectory("doc-stream-out2").toString
-    val ckpt2 = Files.createTempDirectory("doc-stream-ckpt2").toString
-    val docs2 = DocumentStreams.readDocumentStream(spark, in, maxFilesPerTrigger = 1)
-    val q2 = DocumentStreams.curatedShardStreamNative(docs2, out2, ckpt2).start()
-    try q2.processAllAvailable()
-    finally q2.stop()
-    val native = TrainingShards.read(spark, out2, Some(batch1.schema))
-    assert(native.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 6L))
     // epoch-scoped shard names: each data epoch contributed its own shard
     val manifest = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(out2, "_MANIFEST.json")), "UTF-8")
+      java.nio.file.Paths.get(out, "_MANIFEST.json")), "UTF-8")
     val epochs = "-e(\\d+)-".r.findAllMatchIn(manifest).map(_.group(1)).toSet
     assert(epochs.size == 2, s"expected shards from 2 epochs in the manifest: $epochs\n$manifest")
-  }
-
-  test("streaming heavy hitters: MG state persists across batches, stays k-bounded, " +
-    "and keeps a heavy token alive through a batch it never appears in") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("hh-stream-in").toString
-    val ckpt = Files.createTempDirectory("hh-stream-ckpt").toString
-    val k = 9
-
-    def doc(id: Long, src: String, text: String) =
-      (id, text, "en", src, text.length.toLong)
-    // srcH batch 1: "persist" 50×, 50 distinct noise tokens (n=100).
-    // srcH batch 2: 100 DISTINCT noise tokens, zero "persist" — after it
-    // the stream total is 200, θ-threshold n/(k+1)=20 < 50, so the MG
-    // guarantee says "persist" must still be in the candidate set even
-    // though this batch never mentioned it (cross-batch state, not a
-    // per-batch sketch). srcQ has its own keyed stream.
-    val b1 = Seq(
-      doc(1L, "srcH", (Seq.fill(50)("persist") ++ (0 until 50).map(i => s"noise$i")).mkString(" ")),
-      doc(2L, "srcQ", (Seq.fill(30)("qheavy") ++ (0 until 20).map(i => s"qn$i")).mkString(" "))
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val b2 = Seq(
-      doc(3L, "srcH", (100 until 200).map(i => s"noise$i").mkString(" "))
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    b1.coalesce(1).write.mode("overwrite").parquet(s"$in/f1")
-    b2.coalesce(1).write.mode("overwrite").parquet(s"$in/f2")
-    def stage(src: String, name: String, ts: Long): Unit = {
-      val part = new java.io.File(s"$in/$src").listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(in, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(ts)
-    }
-    stage("f1", "b1.parquet", 1000000000000L)
-    stage("f2", "b2.parquet", 1000000100000L)
-
-    // last emission per (source, batch) collected through foreachBatch
-    val emissions = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Seq[String])]()
-    val docs = DocumentStreams.readDocumentStream(spark, in, maxFilesPerTrigger = 1)
-    val q = DocumentStreams.streamingHeavyHitters(docs, k)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long, Seq[String])], id: Long) =>
-        batch.collect().foreach { case (src, n, cands) => emissions.add((id, src, n, cands)) }
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    import scala.jdk.CollectionConverters._
-    val all = emissions.asScala.toSeq
-    val srcHFinal = all.filter(_._2 == "srcH").maxBy(_._1)
-    val srcQFinal = all.filter(_._2 == "srcQ").maxBy(_._1)
-    assert(srcHFinal._3 == 200L, s"srcH stream total drifted: $srcHFinal")
-    assert(srcHFinal._4.contains("persist"),
-      s"heavy token lost across an absent batch — state did not persist: $srcHFinal")
-    assert(srcHFinal._4.size <= k, s"candidate set exceeds the k-counter state bound: $srcHFinal")
-    assert(srcQFinal._3 == 50L && srcQFinal._4.contains("qheavy"),
-      s"per-source keyed state leaked or lost: $srcQFinal")
-    // srcQ saw no batch-2 rows: update-mode must not re-emit it in batch 2
-    assert(!all.exists(e => e._2 == "srcQ" && e._1 > all.filter(_._2 == "srcQ").map(_._1).min),
-      s"srcQ re-emitted without new data: $all")
-  }
-
-  test("streaming token budget: the cap holds ACROSS batches with r06's truncation semantics " +
-    "(the first overflow closes the source)") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("budget-stream-in").toString
-    val ckpt = Files.createTempDirectory("budget-stream-ckpt").toString
-    def doc(id: Long, src: String, nTokens: Int) = {
-      val text = (0 until nTokens).map(i => s"w$i").mkString(" ")
-      (id, text, "en", src, text.length.toLong)
-    }
-    // budget 100: batch 1 admits 40+50=90; batch 2's doc 3 (20 tokens)
-    // would overflow (90+20>100) and CLOSES the source — doc 4 (10)
-    // would individually still fit (90+10=100) but must be dropped,
-    // exactly as r06's monotone cum<=budget filter drops everything
-    // after the first overflow. Provable only if state persisted
-    // across the batch boundary. A second source shows a batch-2
-    // admission still works when its budget is open.
-    val b1 = Seq(doc(1L, "srcB", 40), doc(2L, "srcB", 50), doc(10L, "srcC", 30))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val b2 = Seq(doc(3L, "srcB", 20), doc(4L, "srcB", 10), doc(11L, "srcC", 40))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    b1.coalesce(1).write.mode("overwrite").parquet(s"$in/f1")
-    b2.coalesce(1).write.mode("overwrite").parquet(s"$in/f2")
-    def stage(src: String, name: String, ts: Long): Unit = {
-      val part = new java.io.File(s"$in/$src").listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(in, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(ts)
-    }
-    stage("f1", "b1.parquet", 1000000000000L)
-    stage("f2", "b2.parquet", 1000000100000L)
-
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long)]()
-    val docs = DocumentStreams.readDocumentStream(spark, in, maxFilesPerTrigger = 1)
-    val q = DocumentStreams.streamingTokenBudget(docs, budget = 100L)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long, Long, Long)], _: Long) =>
-        batch.collect().foreach(out.add)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    import scala.jdk.CollectionConverters._
-    val admitted = out.asScala.toSeq.sortBy(_._2)
-    assert(admitted.filter(_._1 == "srcB").map(_._2) == Seq(1L, 2L),
-      s"srcB must truncate at the first overflow (docs 3 AND 4 dropped): $admitted")
-    // srcC stayed open: its batch-2 doc lands via the persisted counter
-    assert(admitted.filter(_._1 == "srcC").map(r => (r._2, r._4)) == Seq((10L, 30L), (11L, 70L)),
-      s"srcC should admit across batches from its persisted cumulative: $admitted")
   }
 
   test("bloom dedup: cross-batch duplicate dropped, novel docs admitted, state size constant") {

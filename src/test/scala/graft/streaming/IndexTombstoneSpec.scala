@@ -15,9 +15,9 @@ import java.nio.file.Files
   *     partition prune survives the anti-join (in-plan check);
   *  2. tombstone replay is idempotent (overwrite-own-partition, the
   *     upsert channel's contract applied to deletes);
-  *  3. a mixed upsert+delete STREAM applies both sides of each epoch
-  *     ([[IndexStreams.streamingIvfUpsertWithDeletes]]), and unknown
-  *     ops fail loudly;
+  *  3. an epoch that lands both upserts ([[IndexStreams.upsertBatch]])
+  *     and deletes ([[IndexStreams.tombstoneBatch]]) serves both sides,
+  *     and a delete-only epoch leaves no empty upsert partition;
   *  4. compaction folds base + upserts − tombstones into a fresh
   *     generation with EXACTLY one row per id, search results are
   *     row-identical before and after, the marker advances, and replay
@@ -110,40 +110,19 @@ class IndexTombstoneSpec extends AnyFunSuite {
       "replay appended tombstones instead of overwriting its own batch")
   }
 
-  test("a mixed upsert+delete stream applies both sides per epoch; unknown ops fail loudly") {
+  test("one epoch lands both sides: its upserts are served and its delete applies") {
     import spark.implicits._
     val emb = Tables.t(spark, sfDir, "embeddings")
     val idxDir = Files.createTempDirectory("graft-ivf-ops").toString
-    val drop = Files.createTempDirectory("graft-ivf-ops-drop").toString
-    val ckpt = Files.createTempDirectory("graft-ivf-ops-ckpt").toString
     IvfIndex.build(emb.filter(col("vec_id") >= 100), idxDir, k = 16, iters = 2)
-    // one file = one epoch: upserts 0..49 AND a delete of base id 105
-    emb.filter(col("vec_id") < 50)
-      .select(lit("upsert").as("op"), col("vec_id"), col("embedding"), col("label"))
-      .unionByName(emb.filter(col("vec_id") === 105L)
-        .select(lit("delete").as("op"), col("vec_id"), col("embedding"), col("label")))
-      .coalesce(1).write.mode("append").parquet(drop)
-    val q = IndexStreams.streamingIvfUpsertWithDeletes(
-      IndexStreams.readOpsStream(spark, drop), idxDir, ckpt).start()
-    q.processAllAvailable(); q.stop()
+    // epoch 0: upserts 0..49 AND a delete of base id 105
+    IndexStreams.upsertBatch(emb.filter(col("vec_id") < 50), 0L, idxDir,
+      IvfIndex.loadCentroids(spark, idxDir))
+    IndexStreams.tombstoneBatch(spark, Seq(105L), 0L, idxDir)
     val qe = emb.filter(col("vec_id") === 0L).select("embedding").as[Array[Float]].head()
     val ids = topIds(IvfIndex.searchIndexLive(spark, idxDir, qe, k = 600, nprobe = 16)).toSet
     assert(ids.contains(5L), "streamed upsert not served")
     assert(!ids.contains(105L), "streamed delete not applied")
-    // unknown op: loud
-    val badDrop = Files.createTempDirectory("graft-ivf-bad-drop").toString
-    val badCkpt = Files.createTempDirectory("graft-ivf-bad-ckpt").toString
-    emb.filter(col("vec_id") === 7L)
-      .select(lit("upsort").as("op"), col("vec_id"), col("embedding"), col("label"))
-      .coalesce(1).write.mode("append").parquet(badDrop)
-    val qb = IndexStreams.streamingIvfUpsertWithDeletes(
-      IndexStreams.readOpsStream(spark, badDrop), idxDir, badCkpt).start()
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      qb.processAllAvailable()
-    }
-    qb.stop()
-    assert(e.getMessage.contains("unknown op") || Option(e.getCause).exists(_.getMessage.contains("unknown op")),
-      s"expected a loud unknown-op failure, got: ${e.getMessage}")
   }
 
   test("a DELETE-ONLY epoch leaves no empty stream partition behind and search " +
@@ -151,16 +130,11 @@ class IndexTombstoneSpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.t(spark, sfDir, "embeddings")
     val idxDir = Files.createTempDirectory("graft-ivf-delonly").toString
-    val drop = Files.createTempDirectory("graft-ivf-delonly-drop").toString
-    val ckpt = Files.createTempDirectory("graft-ivf-delonly-ckpt").toString
     IvfIndex.build(emb, idxDir, k = 16, iters = 2)
-    // one epoch holding ONLY deletes
-    emb.filter(col("vec_id") === 105L)
-      .select(lit("delete").as("op"), col("vec_id"), col("embedding"), col("label"))
-      .coalesce(1).write.mode("append").parquet(drop)
-    val q = IndexStreams.streamingIvfUpsertWithDeletes(
-      IndexStreams.readOpsStream(spark, drop), idxDir, ckpt).start()
-    q.processAllAvailable(); q.stop()
+    // one epoch holding ONLY deletes: its upsert side is an empty batch
+    IndexStreams.upsertBatch(emb.filter(lit(false)), 0L, idxDir,
+      IvfIndex.loadCentroids(spark, idxDir))
+    IndexStreams.tombstoneBatch(spark, Seq(105L), 0L, idxDir)
     assert(!new java.io.File(s"$idxDir/stream_assignment").exists() ||
       new java.io.File(s"$idxDir/stream_assignment").list().forall(!_.startsWith("batch=")) ||
       new java.io.File(s"$idxDir/stream_assignment").listFiles()
@@ -211,6 +185,8 @@ class IndexTombstoneSpec extends AnyFunSuite {
       graft.FaultFs.failingRenamesTo(local.resolve("_LIVE_STATE"))(IvfIndex.compactLiveIndex(spark, idxDir))
     }
     assert(e.getMessage.contains("_LIVE_STATE"), e.getMessage)
+    val litter = local.toFile.list().filter(n => n.startsWith(".") && n.endsWith(".tmp"))
+    assert(litter.isEmpty, s"the failed publish left its temp file: ${litter.toSeq}")
     assert(IvfIndex.readLiveState(spark, idxDir) == st1)
     assert(IvfIndex.compactLiveIndex(spark, idxDir) == IvfIndex.LiveState(2L, 4L), "the retry publishes")
   }
